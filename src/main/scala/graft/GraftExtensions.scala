@@ -56,10 +56,14 @@ object GraftExtensions {
       functions.BitmapExprs.injectables ++
       functions.GeoExprs.injectables ++
       functions.DotProduct.injectables ++
-      functions.ZOrder.injectables
+      functions.ZOrder.injectables ++
+      functions.UnicodeExprs.injectables ++
+      functions.IvfExprs.injectables
 
   /** Register everything on a LIVE session (the extensions path only
-    * applies at session build). Idempotent. */
+    * applies at session build): the functions, the table-valued
+    * functions, the as-of join strategy and the band-join rule.
+    * Idempotent. */
   def registerAll(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     functionInjections.foreach { case (id, info, builder) =>
@@ -72,5 +76,20 @@ object GraftExtensions {
         if (!tvfRegistry.functionExists(id))
           tvfRegistry.registerFunction(id, info, builder)
     }
+    // the planner's strategy list holds both the extension-injected and
+    // the experimental strategies: a session built with these extensions
+    // already plans (and optimizes) with both, and is left alone
+    if (!spark.sessionState.planner.strategies
+        .exists(_ eq plans.AsofJoinStrategy)) {
+      spark.experimental.extraStrategies :+= plans.AsofJoinStrategy
+      if (!spark.experimental.extraOptimizations.contains(plans.BandJoinRule))
+        spark.experimental.extraOptimizations :+= plans.BandJoinRule
+    }
   }
+
+  /** The Column API's registration: every graft_* Column function calls
+    * this before `call_function`, so the functions resolve on any active
+    * session, built with these extensions or not. */
+  private[graft] def registerActive(): Unit =
+    SparkSession.getActiveSession.foreach(registerAll)
 }

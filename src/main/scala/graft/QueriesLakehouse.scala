@@ -1093,10 +1093,7 @@ private[graft] object QueriesLakehouse {
       // injected BandJoinRule optimizer rule rewrites it to the binned
       // equi-join (BandJoinRuleSpec pins the plan); oracle shared
       // verbatim with q_range_join
-      import graft.plans.BandJoinRule
-      if (!s.experimental.extraOptimizations.exists(_ eq BandJoinRule))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ BandJoinRule
+      graft.GraftExtensions.registerAll(s)
       val ev = readEvents(s, dir)
       val busy = ev.where(col("event_type").isin("click", "view"))
         .groupBy(date_trunc("hour", col("ts")).as("window_start"))

@@ -76,8 +76,6 @@ private[graft] object QueriesStream {
       val idx = buildSearchIndex(s, dir)
       val ms = MemoryStream[(Long, Array[String])]
       val sink = "q_stream_search_sink"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", streamStateParts)
       val q = graft.streaming.StreamingOps.bm25ServeStream(s, idx,
           ms.toDF.toDF("query_id", "terms"), "query_id", "terms")
         .writeStream.format("memory").queryName(sink)
@@ -87,10 +85,7 @@ private[graft] object QueriesStream {
         q.processAllAvailable()
         ms.addData((2L, Array("scan", "table")))
         q.processAllAvailable()
-      } finally {
-        q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
+      } finally q.stop()
       s.table(sink).where(col("query_id") === 1L)
         .select(col("doc_id"), col("n_terms"), col("n_hits"), col("score"))
     }),
@@ -118,15 +113,6 @@ private[graft] object QueriesStream {
       }
       val ms = MemoryStream[(java.sql.Timestamp, String, Double, Double, Double)]
       val sink = "q_stream_sessionize_sink"
-      // state-store sizing: each micro-batch spawns one state task per
-      // shuffle partition; with the session default (32) and 5 batches
-      // that was 160 state tasks for a keyed-state cardinality of a few
-      // thousand — 4 partitions x 4 batches carry it with a fraction of
-      // the task + commit-log overhead (output is partition-count AND
-      // batch-split independent; StreamingSpec pins both). Restored
-      // after the run.
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", streamStateParts)
       // event-time timeouts fire in a batch whose watermark has passed
       // the session gap; with no-data batches off (a full state cycle
       // saved per feeding round), sentinel 2 is the batch that runs
@@ -151,10 +137,7 @@ private[graft] object QueriesStream {
             flushTs.getTime + 365L * 24 * 3600 * 1000)
           ms.addData(Seq((flushTs2, "_wm", 0.0, 0.0, 0.0)))
           q.processAllAvailable()
-        } finally {
-          q.stop()
-          s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        }
+        } finally q.stop()
       }
       s.table(sink).where(col("band") =!= "_wm")
         .select(col("band"), col("y"), col("x"), col("start"), col("end"),
@@ -209,21 +192,13 @@ private[graft] object QueriesStream {
         .select(col("lang"),
           explode(graft.functions.TextHashExprs.wsTokens(col("text"))).as("_tok"))
         .where(col("_tok") =!= "")
-      // state-store sizing like the other stateful rows (r15 — this row
-      // previously ran the session default, 32 state tasks per batch for
-      // a (lang, reg) state of a few thousand rows)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", streamStateParts)
       val q = graft.streaming.StreamingOps
         .distinctRegistersStream(toks, col("_tok"), Seq("lang"))
         .writeStream.format("memory").queryName(sink)
         .outputMode("complete").start()
       try docs.grouped(math.max(1, (docs.length + 1) / 2)).foreach { b =>
         ms.addData(b.toSeq); q.processAllAvailable()
-      } finally {
-        q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
+      } finally q.stop()
       graft.text.Sketches.hllEstimate(s.table(sink), Seq("lang"))
     }),
     "q_stream_lm_score" -> ((s, dir) => {
@@ -274,11 +249,6 @@ private[graft] object QueriesStream {
         .as[(Long, String)].collect().sortBy(_._1)
       val ms = MemoryStream[(Long, String)]
       val sink = "q_stream_neardup_sink"
-      // state-store sizing as q_stream_sessionize: 4 partitions carry a
-      // few-thousand-bucket keyed state with a fraction of the 32x task
-      // + commit-log overhead (output pinned partition-count independent)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", streamStateParts)
       val q = graft.streaming.StreamingOps.dedupStreamSimhash(
           ms.toDF.toDF("doc_id", "text"), "text", "doc_id", maxDist = 6)
         .toDF()
@@ -288,10 +258,7 @@ private[graft] object QueriesStream {
         docs.grouped(math.max(1, (docs.length + 1) / 2)).foreach { b =>
           ms.addData(b.toSeq); q.processAllAvailable()
         }
-      } finally {
-        q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
+      } finally q.stop()
       s.table(sink).dropDuplicates("id_a", "id_b")
     }),
     "q_stream_agg_period" -> ((s, dir) => {
@@ -315,8 +282,6 @@ private[graft] object QueriesStream {
       }
       val ms = MemoryStream[(java.sql.Timestamp, String, Double, Double, Double)]
       val sink = "q_stream_agg_period_sink"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", streamStateParts)
       // append-mode windows emit when the watermark passes the window
       // end; with no-data batches off (one full state cycle saved per
       // feeding round) the flush vehicle is a SECOND sentinel batch:
@@ -341,10 +306,7 @@ private[graft] object QueriesStream {
             flushTs.getTime + 365L * 24 * 3600 * 1000)
           ms.addData(Seq((flushTs2, "_wm", 0.0, 0.0, 0.0)))
           q.processAllAvailable()
-        } finally {
-          q.stop()
-          s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        }
+        } finally q.stop()
       }
       s.table(sink).where(col("band") =!= "_wm")
     }),
@@ -395,18 +357,13 @@ private[graft] object QueriesStream {
         .as[(Long, String)].collect().sortBy(_._1)
       val ms = MemoryStream[(Long, String)]
       val sink = "q_stream_ngram_monitor_sink"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", streamStateParts)
       val q = graft.streaming.StreamingOps.ngramCountsStream(
           ms.toDF.toDF("doc_id", "text"), "text", 3)
         .writeStream.format("memory").queryName(sink)
         .outputMode("complete").start()
       try docs.grouped(math.max(1, (docs.length + 1) / 2)).foreach { b =>
         ms.addData(b.toSeq); q.processAllAvailable()
-      } finally {
-        q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
+      } finally q.stop()
       s.table(sink)
     }),
     "q_stream_dedup_incremental" -> ((s, dir) => {
@@ -455,8 +412,6 @@ private[graft] object QueriesStream {
         .as[(Long, Array[Float])].collect().sortBy(_._1)
       val ms = MemoryStream[(Long, Array[Float])]
       val sink = "q_stream_ann_sink"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", streamStateParts)
       val q = graft.streaming.StreamingOps.annServeStream(s, idx,
           ms.toDF.toDF("vec_id", "embedding"), "vec_id", "embedding",
           k = 5, nProbe = 4)
@@ -464,10 +419,7 @@ private[graft] object QueriesStream {
         .outputMode("complete").start()
       try qrows.grouped(5).foreach { b =>
         ms.addData(b.toSeq); q.processAllAvailable()
-      } finally {
-        q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
+      } finally q.stop()
       s.table(sink)
         .select(col("query_id"), posexplode(col("topk")).as(Seq("_pos", "_s")))
         .select(col("query_id"), (col("_pos") + 1).cast("int").as("rank"),
@@ -521,8 +473,6 @@ private[graft] object QueriesStream {
         ms.toDF.toDF("user_id", "event_type", "ts"),
         Seq("signup", "click", "purchase"), delay = "2 hours")
       val sink = "q_stream_funnel_sink"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", streamStateParts)
       // with no-data batches off (each cost a full 4-partition state
       // rescan here, ~1.4 s), the event-time timeouts fire during the
       // SECOND sentinel batch, which runs under the watermark sentinel 1
@@ -543,9 +493,7 @@ private[graft] object QueriesStream {
             sentinelTs.getTime + 365L * 24 * 3600 * 1000)
           ms.addData(Seq((-2L, "signup", sentinelTs2)))
           q.processAllAvailable()
-        } finally {
-          q.stop(); s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        }
+        } finally q.stop()
       }
       s.table(sink).where(col("user_id") >= 0)
         .select("user_id", "signup_ts", "click_ts", "purchase_ts",
@@ -578,8 +526,6 @@ private[graft] object QueriesStream {
       val ms = MemoryStream[(Long, java.sql.Timestamp, String, String,
         Double)]
       val sink = "q_stream_merge_sink"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", streamStateParts)
       val q = graft.streaming.StreamingOps.changelogLatestStream(
           ms.toDF.toDF("o_orderkey", "change_ts", "op", "o_orderstatus",
             "o_totalprice"),
@@ -589,10 +535,7 @@ private[graft] object QueriesStream {
       try {
         ms.addData(baseRows.toSeq); q.processAllAvailable()
         ms.addData(changeRows.toSeq); q.processAllAvailable()
-      } finally {
-        q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
+      } finally q.stop()
       s.table(sink).where(col("op") =!= "D")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     }),
@@ -806,8 +749,6 @@ private[graft] object QueriesStream {
         Seq("user_id"), "ts", "cts",
         bandMs = 30L * 60 * 1000, watermarkMs = 30L * 24 * 3600 * 1000)
       val sink = "q_stream_join_sink"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", streamStateParts)
       // watermark-only (no-data) micro-batches are OUTPUT-NEUTRAL for an
       // inner band join — they exist for outer-join null emission and
       // idle-stream state cleanup (eviction still runs on data batches).
@@ -833,7 +774,6 @@ private[graft] object QueriesStream {
         }
       } finally {
         q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
         s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
           prevNoData)
       }
@@ -873,8 +813,6 @@ private[graft] object QueriesStream {
         bandMs = 30L * 60 * 1000, watermarkMs = 2L * 3600 * 1000,
         joinType = "left_outer")
       val sink = "q_stream_join_outer_sink"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", streamStateParts)
       // outer joins DO need watermark-driven null emission — but a
       // watermark-only (no-data) micro-batch is not the only vehicle:
       // eviction/null-flush also runs at the start of the NEXT data
@@ -910,7 +848,6 @@ private[graft] object QueriesStream {
         q.processAllAvailable()
       } finally {
         q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
         s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
           prevNoData)
       }

@@ -28,21 +28,14 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // Jackson escapes backslash, quote and ALL control chars (<0x20) — a
+    // tab or CR in oracle SQL would otherwise make the gate's JSON load
+    // fail and silently zero the correctness check.
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val oracle = json.createObjectNode()
+    SparkEntry.oracleSql.foreach { case (k, v) => oracle.put(k, v) }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      json.writeValueAsString(oracle))
     // Belt-and-braces artifact guard (round 11's CORRECTNESS file came
     // back `{}` with no repo-side cause): re-read what was just written
     // and fail LOUDLY if the driver's next steps could see less than the
@@ -52,8 +45,8 @@ object Verify {
     // containing a _SUCCESS marker. The final stdout line is a marker the
     // driver/judge can grep to distinguish "Verify dumped N and exited 0"
     // from an artifact lost downstream.
-    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Files.readString(Paths.get(s"$outDir/oracle_sql.json")))
+    val parsed =
+      json.readTree(Files.readString(Paths.get(s"$outDir/oracle_sql.json")))
     require(parsed.isObject && parsed.size() == SparkEntry.oracleSql.size,
       s"oracle_sql.json round-trip mismatch: parsed ${parsed.size()} " +
         s"entries, expected ${SparkEntry.oracleSql.size}")

@@ -34,6 +34,9 @@ final class Server(spark: SparkSession, catalog: Catalog,
 
   private val cache = new ConcurrentHashMap[String, String]()
   private val running = new ConcurrentHashMap[String, Boolean]()
+  // error bodies carry arbitrary messages: Jackson escapes every control
+  // character, so the body stays valid JSON
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
   server.setExecutor(Executors.newFixedThreadPool(4))
 
@@ -106,9 +109,11 @@ final class Server(spark: SparkSession, catalog: Catalog,
         // openEO error identities surface as the spec's {code, message}
         // shape with 400 (openeo_error_messages.py parity), not a bare 500
         case e: graft.OpenEoError =>
-          (400, s"""{"code":${jsonStr(e.code)},"message":${jsonStr(e.msg)}}""")
+          (400, json.createObjectNode().put("code", e.code)
+            .put("message", e.msg).toString)
         case e: Exception =>
-          (500, s"""{"error":${jsonStr(String.valueOf(e.getMessage))}}""")
+          (500, json.createObjectNode()
+            .put("error", String.valueOf(e.getMessage)).toString)
       }
     val bytes = body.getBytes(UTF_8)
     ex.getResponseHeaders.set("Content-Type", "application/json")
@@ -120,10 +125,6 @@ final class Server(spark: SparkSession, catalog: Catalog,
   private def md5(s: String): String =
     MessageDigest.getInstance("MD5").digest(s.getBytes(UTF_8))
       .map("%02x".format(_)).mkString
-
-  private def jsonStr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replace("\n", "\\n") + "\""
 }
 
 /** Collection catalog over the parquet store — the reference scrapes a

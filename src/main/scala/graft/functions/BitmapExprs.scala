@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
@@ -541,53 +541,45 @@ object BitmapExprs {
         "graft_bitmap_andnot"),
       (cs: Seq[Expression]) => BitmapAndNot(cs(0), cs(1))))
 
-  private def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    injectables.foreach { case (id, info, builder) =>
-      if (!registry.functionExists(id))
-        registry.registerFunction(id, info, builder)
-    }
-  }
-
   /** Aggregate LONG values into an exact distinct-set sketch. */
   def bitmapAgg(value: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_bitmap_agg", value)
   }
 
   /** Union pre-built sketches (the rollup face). */
   def bitmapUnionAgg(sketch: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_bitmap_union_agg", sketch)
   }
 
   /** Exact distinct count of a sketch. */
   def bitmapCount(sketch: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_bitmap_count", sketch)
   }
 
   /** Merge two sketches row-wise. */
   def bitmapOr(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_bitmap_or", a, b)
   }
 
   /** Membership probe. */
   def bitmapContains(sketch: Column, value: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_bitmap_contains", sketch, value)
   }
 
   /** Intersection (retention). */
   def bitmapAnd(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_bitmap_and", a, b)
   }
 
   /** Difference (churn). */
   def bitmapAndNot(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_bitmap_andnot", a, b)
   }
 }

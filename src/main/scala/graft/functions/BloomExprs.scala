@@ -33,17 +33,9 @@ object BloomExprs {
         "graft_might_contain"),
       (cs: Seq[Expression]) => BloomFilterMightContain(cs(0), cs(1))))
 
-  private def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    injectables.foreach { case (id, info, builder) =>
-      if (!registry.functionExists(id))
-        registry.registerFunction(id, info, builder)
-    }
-  }
-
   /** Aggregate LONG keys into a Bloom filter (binary sketch). */
   def bloomAgg(value: Column, estimatedItems: Long, numBits: Long): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_bloom_agg", value,
       lit(estimatedItems), lit(numBits))
   }
@@ -53,7 +45,7 @@ object BloomExprs {
     * Spark's own check only fires at analysis time, far from the call
     * site and with an opaque message. */
   def mightContain(bloom: Column, value: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     // structural check: analyze the column against a one-row relation and
     // ask the resolved Catalyst expression for foldability — accepts
     // lit(bytes) and anything Spark would constant-fold over it

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
@@ -90,20 +90,9 @@ object DotProduct {
         DotProduct(children.head, children(1))
       }))
 
-  /** Idempotently register `graft_dot` in the session's function registry
-    * (callable directly for library use; [[graft.GraftExtensions]] is the
-    * session-build path). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    injectables.foreach { case (id, info, builder) =>
-      if (!registry.functionExists(id))
-        registry.registerFunction(id, info, builder)
-    }
-  }
-
   /** Codegen dot product column; registers the function on first use. */
   def dot(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function(name, a, b)
   }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{
@@ -13,10 +13,11 @@ import org.apache.spark.sql.types._
   *
   * The reference reprojects whole cubes through GDAL/pyproj at load time
   * (load_odc_collection.py:128-173, openeo_odc_driver.py:175-202). Here
-  * the Snyder forward/inverse series (graft.ops.Utm / Laea) run directly
-  * inside the executor projection — pure JVM math, one virtual call per
-  * row, no Python/GDAL boundary — and the regrid that follows is the
-  * usual groupBy bin. Used by the resample_spatial projection fold. */
+  * the registry projections of [[graft.ops.Proj]] run directly inside the
+  * executor projection — pure JVM math, both CRS definitions resolved
+  * once per expression instance, no Python/GDAL boundary — and the regrid
+  * that follows is the usual groupBy bin. Used by the resample_spatial
+  * projection fold. */
 object GeoExprs {
 
   case class ReprojectPoint(left: Expression, right: Expression,
@@ -33,9 +34,16 @@ object GeoExprs {
           s"graft_reproject needs (double, double), got ($l, $r)")
       }
 
+    // resolved once, not per row (a TransverseMercator precomputes its
+    // meridian-arc origin on construction)
+    @transient private lazy val fromDef = graft.ops.Crs.projDef(fromEpsg)
+    @transient private lazy val toDef = graft.ops.Crs.projDef(toEpsg)
+
     override def nullSafeEval(xv: Any, yv: Any): Any = {
-      val (nx, ny) = graft.ops.Crs.transformPoint(
-        xv.asInstanceOf[Double], yv.asInstanceOf[Double], fromEpsg, toEpsg)
+      val x = xv.asInstanceOf[Double]; val y = yv.asInstanceOf[Double]
+      val (nx, ny) =
+        if (fromEpsg == toEpsg) (x, y)
+        else graft.ops.Crs.transformPoint(x, y, fromDef, toDef)
       new GenericInternalRow(Array[Any](nx, ny))
     }
 
@@ -59,17 +67,9 @@ object GeoExprs {
         intLit(cs(2), "graft_reproject fromEpsg"),
         intLit(cs(3), "graft_reproject toEpsg"))))
 
-  private def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    injectables.foreach { case (id, info, builder) =>
-      if (!registry.functionExists(id))
-        registry.registerFunction(id, info, builder)
-    }
-  }
-
   /** `reproject(x, y)` → struct(x, y) in the target CRS. */
   def reproject(x: Column, y: Column, fromEpsg: Int, toEpsg: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_reproject", x.cast("double"), y.cast("double"),
       lit(fromEpsg), lit(toEpsg))
   }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
@@ -151,20 +151,18 @@ object IvfExprs {
     TwoLevelArgmin(cs.head, groups, children, probes)
   }
 
-  private def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("graft_ivf_assign2")
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(id))
-      registry.registerFunction(id,
-        new ExpressionInfo(classOf[TwoLevelArgmin].getName,
-          "graft_ivf_assign2"), builder)
-  }
+  /** injectFunction payload — see [[graft.GraftExtensions]]. */
+  val injectables: Seq[(FunctionIdentifier, ExpressionInfo,
+      Seq[Expression] => Expression)] = Seq(
+    (FunctionIdentifier("graft_ivf_assign2"),
+      new ExpressionInfo(classOf[TwoLevelArgmin].getName, "graft_ivf_assign2"),
+      builder))
 
   /** `vec` → assigned centroid id through the two-level structure. */
   def assign2(vec: Column, groups: Array[(Long, Array[Double])],
       children: Array[Array[(Long, Array[Double])]],
       probes: Int = 2): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     require(groups.length == children.length,
       "groups and children must align")
     val gC = array(groups.map(g =>

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression, XxHash64Function}
@@ -765,7 +765,7 @@ object TextHashExprs {
 
   /** [[CountInSortedSet]] as a Column (set must be sorted ascending). */
   def countInSortedSet(arr: Column, sorted: Array[Long]): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_count_in_sorted_set", arr,
       org.apache.spark.sql.functions.typedLit(sorted.toSeq))
   }
@@ -825,7 +825,7 @@ object TextHashExprs {
 
   /** [[CountAnyOf]] as a Column over a fixed needle list. */
   def countAnyOf(text: Column, needles: Seq[String]): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_count_any_of", text,
       org.apache.spark.sql.functions.typedLit(needles))
   }
@@ -986,7 +986,7 @@ object TextHashExprs {
 
   /** (identifier, info, builder) triples — the
     * `SparkSessionExtensions.injectFunction` payloads. Shared by the
-    * lazy per-session [[register]] and by [[graft.GraftExtensions]]
+    * lazy per-session [[graft.GraftExtensions.registerActive]] and by [[graft.GraftExtensions]]
     * (`spark.sql.extensions=graft.GraftExtensions` registers every
     * graft_* function at session build, the cluster-deployment path). */
   val injectables: Seq[(FunctionIdentifier, ExpressionInfo,
@@ -1036,28 +1036,20 @@ object TextHashExprs {
           intLit(cs(2), "graft_cms_buckets w"))))
   }
 
-  private def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    injectables.foreach { case (id, info, builder) =>
-      if (!registry.functionExists(id))
-        registry.registerFunction(id, info, builder)
-    }
-  }
-
   def simhash64(tokens: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_simhash64", tokens)
   }
 
   def minhashSig(shingles: Column, k: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_minhash_sig", shingles,
       org.apache.spark.sql.functions.lit(k))
   }
 
   /** One-pass text→MinHash signature (caller lowers/trims the text). */
   def minhashText(text: Column, n: Int, k: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_minhash_text", text,
       org.apache.spark.sql.functions.lit(n),
       org.apache.spark.sql.functions.lit(k))
@@ -1065,39 +1057,39 @@ object TextHashExprs {
 
   /** MinHash signature from a persisted shingle-hash array. */
   def minhashFromHashes(hashes: Column, k: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_minhash_from_hashes", hashes,
       org.apache.spark.sql.functions.lit(k))
   }
 
   /** One-pass exact Jaccard over two array<long> columns. */
   def jaccardLong(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_jaccard", a, b)
   }
 
   /** [[jaccardLong]] for pre-sorted distinct arrays (linear merge). */
   def jaccardLongSorted(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_jaccard_sorted", a, b)
   }
 
   /** Intersection size of pre-sorted distinct long arrays. */
   def intersectCountSorted(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_intersect_sorted", a, b)
   }
 
   /** One-pass text→distinct-shingle-hash array (caller lowers/trims). */
   def shingleHashes(text: Column, n: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_shingle_hashes", text,
       org.apache.spark.sql.functions.lit(n))
   }
 
   /** One-pass text→SimHash over word n-grams (caller lowers/trims). */
   def simhashText(text: Column, n: Int, portable: Boolean = false): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_simhash_text", text,
       org.apache.spark.sql.functions.lit(n),
       org.apache.spark.sql.functions.lit(if (portable) 1 else 0))
@@ -1105,13 +1097,13 @@ object TextHashExprs {
 
   /** One-pass repetition statistics struct (caller lowers/trims). */
   def repetitionStats(text: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_repetition_stats", text)
   }
 
   /** One-pass n-token window array (caller lowers/trims). */
   def tokenWindows(text: Column, n: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_token_windows", text,
       org.apache.spark.sql.functions.lit(n))
   }
@@ -1121,7 +1113,7 @@ object TextHashExprs {
     * the lower(trim(…)) pattern; nine call sites kept the regex because
     * only the wrapper differed — r15 closes them with this form). */
   def wsSplit(text: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_ws_split", text)
   }
 
@@ -1130,7 +1122,7 @@ object TextHashExprs {
     * output, no per-row Pattern.compile. Use for every tokenizing hot
     * path; oracles keep replaying the regex formulation. */
   def wsTokens(text: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_ws_split",
       org.apache.spark.sql.functions.lower(
         org.apache.spark.sql.functions.trim(text)))
@@ -1139,13 +1131,13 @@ object TextHashExprs {
   /** Per-row term-frequency map over a token array (one hash-map pass;
     * the shuffle-free inverted-index build path). */
   def termCounts(tokens: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_term_counts", tokens)
   }
 
   /** Portable hashing-trick bucket (unsigned FNV-1a mod dim). */
   def fnvBucket(token: Column, dim: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_fnv_bucket", token,
       org.apache.spark.sql.functions.lit(dim))
   }
@@ -1153,14 +1145,14 @@ object TextHashExprs {
   /** HLL register parts struct(reg, rank) of a string value (see
     * [[HllParts]] for the rank-cap contract). */
   def hllParts(value: Column, p: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_hll_parts", value,
       org.apache.spark.sql.functions.lit(p))
   }
 
   /** Count-min bucket indices (length-d array) of a string value. */
   def cmsBuckets(value: Column, d: Int, w: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_cms_buckets", value,
       org.apache.spark.sql.functions.lit(d),
       org.apache.spark.sql.functions.lit(w))

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions.udaf
   * the shuffle, so only nPartitions × nQueries × k tiny rows ever move.
   *
   * The buffer is a pair of PRIMITIVE arrays (ids, cosines) rather than a
-  * `Seq[ScoredNeighbor]`. Measured honestly (TopKBench, BENCH_NOTES.md):
+  * `Seq[ScoredNeighbor]`. Measured honestly (BENCH_NOTES.md):
   * udaf aggregators run under ObjectAggregationIterator, which keeps the
   * buffer as a JVM object BETWEEN updates and only encodes it at the
   * partial→final shuffle — so the two buffer types benchmark the same at

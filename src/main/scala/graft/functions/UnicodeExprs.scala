@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
@@ -153,35 +153,29 @@ object UnicodeExprs {
     (id, info, builder)
   }
 
-  private val injectables = Seq(
+  /** injectFunction payloads — see [[graft.GraftExtensions]]. */
+  val injectables: Seq[(FunctionIdentifier, ExpressionInfo,
+      Seq[Expression] => Expression)] = Seq(
     entry("graft_nfkc_fold", classOf[NfkcFold])(cs => NfkcFold(cs.head)),
     entry("graft_script_counts", classOf[ScriptCounts])(cs =>
       ScriptCounts(cs.head)),
     entry("graft_cjk_count", classOf[CjkCount])(cs => CjkCount(cs.head)))
 
-  private def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    injectables.foreach { case (id, info, builder) =>
-      if (!registry.functionExists(id))
-        registry.registerFunction(id, info, builder)
-    }
-  }
-
   /** NFKC + category fold (see [[NfkcFold]]). */
   def nfkcFold(text: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_nfkc_fold", text)
   }
 
   /** Per-script character counts struct (see [[ScriptCounts]]). */
   def scriptCounts(text: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_script_counts", text)
   }
 
   /** Single-pass CJK character count (see [[CjkCount]]). */
   def cjkCount(text: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function("graft_cjk_count", text)
   }
 }

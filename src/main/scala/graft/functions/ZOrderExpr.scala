@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -117,14 +117,6 @@ object ZOrder {
         ZValue(children.tail, bits)
       }))
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    injectables.foreach { case (id, info, builder) =>
-      if (!registry.functionExists(id))
-        registry.registerFunction(id, info, builder)
-    }
-  }
-
   /** Quantize `x` from `[min, max]` onto the `[0, 2^bits)` integer grid —
     * floor((x-min)/(max-min) * 2^bits) clamped. Plain IEEE double ops in
     * a fixed order, so an external engine evaluating the same formula
@@ -137,7 +129,7 @@ object ZOrder {
 
   /** Morton key column over pre-quantized long columns. */
   def zvalue(bits: Int, quantized: Column*): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    graft.GraftExtensions.registerActive()
     call_function(name, (lit(bits) +: quantized): _*)
   }
 

@@ -45,7 +45,7 @@ object Filters {
 
   /** `filter_bbox` — transform bbox corners from the given CRS to the cube
     * CRS on the driver (openeo_odc_driver.py:1036-1078 uses pyproj; we use
-    * [[Utm]]), then plain range predicates that Catalyst turns into
+    * [[Crs]]), then plain range predicates that Catalyst turns into
     * row-group skipping on x/y. */
   def filterBbox(c: Cube, west: Double, south: Double, east: Double,
       north: Double, bboxEpsg: Int = 4326): Cube =

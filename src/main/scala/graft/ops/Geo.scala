@@ -93,288 +93,41 @@ object Geo {
   }
 }
 
-/** Minimal Transverse-Mercator (UTM) <-> geographic conversion, pure Scala,
-  * driver-side only — used to transform the 4 bbox corners / polygon
-  * vertices of a spatial filter from EPSG:4326 into the cube CRS before
-  * compiling the range predicate, replacing the reference's pyproj calls
-  * (openeo_odc_driver.py:1036-1078, 641-652). Formulas are the public
-  * Snyder series (USGS PP 1395, pp. 60-64); accuracy ~1e-2 m, ample for
-  * bbox corners.
-  */
-object Utm {
-  private val a = 6378137.0              // WGS84
-  private val f = 1.0 / 298.257223563
-  private val e2 = f * (2 - f)
-  private val ep2 = e2 / (1 - e2)
-  private val k0 = 0.9996
-
-  def epsgToZone(epsg: Int): (Int, Boolean) = {
-    require((epsg >= 32601 && epsg <= 32660) || (epsg >= 32701 && epsg <= 32760)
-      || (epsg >= 25828 && epsg <= 25838),
-      s"not a UTM EPSG code: $epsg")
-    // 258xx = ETRS89 / UTM (GRS80): the GRS80 and WGS84 ellipsoids share
-    // the semi-major axis and differ in flattening by <1e-9 (sub-mm on the
-    // ground) — far below the Snyder series' own ~1e-2 m truncation, so
-    // the WGS84 constants serve both
-    if (epsg >= 32701 && epsg <= 32760) (epsg - 32700, false)
-    else if (epsg >= 32601) (epsg - 32600, true)
-    else (epsg - 25800, true)
-  }
-
-  /** lon/lat (deg, EPSG:4326) → (easting, northing) in the given UTM EPSG. */
-  def fromLonLat(lon: Double, lat: Double, epsg: Int): (Double, Double) = {
-    val (zone, north) = epsgToZone(epsg)
-    val lam0 = math.toRadians(zone * 6 - 183)
-    val phi = math.toRadians(lat); val lam = math.toRadians(lon)
-    val n = a / math.sqrt(1 - e2 * math.sin(phi) * math.sin(phi))
-    val t = math.tan(phi) * math.tan(phi)
-    val c = ep2 * math.cos(phi) * math.cos(phi)
-    val bigA = (lam - lam0) * math.cos(phi)
-    val m = a * ((1 - e2 / 4 - 3 * e2 * e2 / 64 - 5 * e2 * e2 * e2 / 256) * phi -
-      (3 * e2 / 8 + 3 * e2 * e2 / 32 + 45 * e2 * e2 * e2 / 1024) * math.sin(2 * phi) +
-      (15 * e2 * e2 / 256 + 45 * e2 * e2 * e2 / 1024) * math.sin(4 * phi) -
-      (35 * e2 * e2 * e2 / 3072) * math.sin(6 * phi))
-    val x = k0 * n * (bigA + (1 - t + c) * math.pow(bigA, 3) / 6 +
-      (5 - 18 * t + t * t + 72 * c - 58 * ep2) * math.pow(bigA, 5) / 120) + 500000.0
-    val y0 = k0 * (m + n * math.tan(phi) * (bigA * bigA / 2 +
-      (5 - t + 9 * c + 4 * c * c) * math.pow(bigA, 4) / 24 +
-      (61 - 58 * t + t * t + 600 * c - 330 * ep2) * math.pow(bigA, 6) / 720))
-    (x, if (north) y0 else y0 + 10000000.0)
-  }
-
-  /** (easting, northing) in UTM EPSG → lon/lat (deg). */
-  def toLonLat(x: Double, y: Double, epsg: Int): (Double, Double) = {
-    val (zone, north) = epsgToZone(epsg)
-    val lam0 = math.toRadians(zone * 6 - 183)
-    val yy = if (north) y else y - 10000000.0
-    val m = yy / k0
-    val mu = m / (a * (1 - e2 / 4 - 3 * e2 * e2 / 64 - 5 * e2 * e2 * e2 / 256))
-    val e1 = (1 - math.sqrt(1 - e2)) / (1 + math.sqrt(1 - e2))
-    val phi1 = mu + (3 * e1 / 2 - 27 * math.pow(e1, 3) / 32) * math.sin(2 * mu) +
-      (21 * e1 * e1 / 16 - 55 * math.pow(e1, 4) / 32) * math.sin(4 * mu) +
-      (151 * math.pow(e1, 3) / 96) * math.sin(6 * mu) +
-      (1097 * math.pow(e1, 4) / 512) * math.sin(8 * mu)
-    val n1 = a / math.sqrt(1 - e2 * math.sin(phi1) * math.sin(phi1))
-    val r1 = a * (1 - e2) / math.pow(1 - e2 * math.sin(phi1) * math.sin(phi1), 1.5)
-    val t1 = math.tan(phi1) * math.tan(phi1)
-    val c1 = ep2 * math.cos(phi1) * math.cos(phi1)
-    val d = (x - 500000.0) / (n1 * k0)
-    val phi = phi1 - (n1 * math.tan(phi1) / r1) * (d * d / 2 -
-      (5 + 3 * t1 + 10 * c1 - 4 * c1 * c1 - 9 * ep2) * math.pow(d, 4) / 24 +
-      (61 + 90 * t1 + 298 * c1 + 45 * t1 * t1 - 252 * ep2 - 3 * c1 * c1) *
-        math.pow(d, 6) / 720)
-    val lam = lam0 + (d - (1 + 2 * t1 + c1) * math.pow(d, 3) / 6 +
-      (5 - 2 * c1 + 28 * t1 - 3 * c1 * c1 + 8 * ep2 + 24 * t1 * t1) *
-        math.pow(d, 5) / 120) / math.cos(phi1)
-    (math.toDegrees(lam), math.toDegrees(phi))
-  }
-
-  /** Transform a ring between EPSG:4326 and a UTM CRS (either direction). */
-  def transformRing(ring: Geo.Ring, fromEpsg: Int, toEpsg: Int): Geo.Ring = {
-    if (fromEpsg == toEpsg) ring
-    else if (fromEpsg == 4326) ring.map { case (lo, la) => fromLonLat(lo, la, toEpsg) }
-    else if (toEpsg == 4326) ring.map { case (x, y) => toLonLat(x, y, fromEpsg) }
-    else transformRing(transformRing(ring, fromEpsg, 4326), 4326, toEpsg)
-  }
-}
-
-/** ETRS89-extended / LAEA Europe (EPSG:3035) — the Lambert Azimuthal
-  * Equal-Area projection on GRS80, the standard EU-wide EO grid the
-  * reference handles through pyproj (openeo_odc_driver.py:1036-1078).
-  * Ellipsoidal forward/inverse from the public Snyder series (USGS PP
-  * 1395, pp. 187-190: authalic-latitude formulation); accuracy well under
-  * a meter — ample for bbox/polygon vertices.
-  */
-object Laea {
-  private val a = 6378137.0               // GRS80
-  private val f = 1.0 / 298.257222101
-  private val e2 = f * (2 - f)
-  private val e = math.sqrt(e2)
-  // EPSG:3035 definition
-  private val lat0 = math.toRadians(52.0)
-  private val lon0 = math.toRadians(10.0)
-  private val fe = 4321000.0
-  private val fn = 3210000.0
-
-  private def q(phi: Double): Double = {
-    val s = math.sin(phi)
-    (1 - e2) * (s / (1 - e2 * s * s) -
-      (1 / (2 * e)) * math.log((1 - e * s) / (1 + e * s)))
-  }
-  private val qp = q(math.Pi / 2)
-  private val q1 = q(lat0)
-  private val beta1 = math.asin(q1 / qp)
-  private val rq = a * math.sqrt(qp / 2)
-  private val m1 = math.cos(lat0) / math.sqrt(1 - e2 * math.sin(lat0) * math.sin(lat0))
-  private val d = a * m1 / (rq * math.cos(beta1))
-
-  /** lon/lat (deg, EPSG:4326) → (easting, northing) EPSG:3035. */
-  def fromLonLat(lon: Double, lat: Double): (Double, Double) = {
-    val phi = math.toRadians(lat); val lam = math.toRadians(lon)
-    val beta = math.asin(q(phi) / qp)
-    val b = rq * math.sqrt(2 / (1 + math.sin(beta1) * math.sin(beta) +
-      math.cos(beta1) * math.cos(beta) * math.cos(lam - lon0)))
-    val x = fe + b * d * math.cos(beta) * math.sin(lam - lon0)
-    val y = fn + (b / d) * (math.cos(beta1) * math.sin(beta) -
-      math.sin(beta1) * math.cos(beta) * math.cos(lam - lon0))
-    (x, y)
-  }
-
-  /** (easting, northing) EPSG:3035 → lon/lat (deg). */
-  def toLonLat(x: Double, y: Double): (Double, Double) = {
-    val dx = (x - fe) / d; val dy = d * (y - fn)
-    val rho = math.sqrt(dx * dx + dy * dy)
-    if (rho == 0.0) return (math.toDegrees(lon0), math.toDegrees(lat0))
-    val ce = 2 * math.asin(rho / (2 * rq))
-    val qv = qp * (math.cos(ce) * math.sin(beta1) +
-      dy * math.sin(ce) * math.cos(beta1) / rho)
-    val lam = lon0 + math.atan2(dx * math.sin(ce),
-      rho * math.cos(beta1) * math.cos(ce) -
-        dy * math.sin(beta1) * math.sin(ce))
-    // iterate the inverse authalic series (Snyder 3-16); converges in ~3
-    var phi = math.asin(math.max(-1.0, math.min(1.0, qv / 2)))
-    var i = 0
-    while (i < 6) {
-      val s = math.sin(phi)
-      val om = 1 - e2 * s * s
-      phi += (om * om / (2 * math.cos(phi))) *
-        (qv / (1 - e2) - s / om +
-          (1 / (2 * e)) * math.log((1 - e * s) / (1 + e * s)))
-      i += 1
-    }
-    (math.toDegrees(lam), math.toDegrees(phi))
-  }
-}
-
-/** Web-Mercator (EPSG:3857) — the spherical Mercator used by slippy-map
-  * tiles; the most commonly requested CRS after 4326/UTM. Public formulas
-  * (Snyder PP 1395, p. 41, spherical case with R = WGS84 semi-major):
-  * the projection is DEFINED on the sphere — using geodetic latitude on
-  * R = a is exact 3857, not an approximation. */
-object WebMercator {
-  private val R = 6378137.0
-  val Limit = 85.051128779806604 // atan(sinh(pi)) — the square world edge
-
-  /** lon/lat (deg, EPSG:4326) → (x, y) EPSG:3857. Latitudes beyond the
-    * square-world edge CLAMP to ±Limit (the universal Web-Mercator
-    * convention — a whole-world bbox with north=90 must map to the top
-    * edge, not crash). */
-  def fromLonLat(lon: Double, lat: Double): (Double, Double) = {
-    val cl = math.max(-Limit, math.min(Limit, lat))
-    (R * math.toRadians(lon),
-      R * math.log(math.tan(math.Pi / 4 + math.toRadians(cl) / 2)))
-  }
-
-  /** (x, y) EPSG:3857 → lon/lat (deg). */
-  def toLonLat(x: Double, y: Double): (Double, Double) =
-    (math.toDegrees(x / R),
-      math.toDegrees(2 * math.atan(math.exp(y / R)) - math.Pi / 2))
-}
-
-/** RGF93 / Lambert-93 (EPSG:2154) — France's national CRS: Lambert
-  * Conformal Conic, two standard parallels, on GRS80. Public Snyder
-  * formulas (USGS PP 1395, pp. 107-109, ellipsoidal 2SP); RGF93 is
-  * ETRS89-aligned, so no datum shift vs WGS84 at bbox accuracy. */
-object Lambert93 {
-  private val a = 6378137.0               // GRS80
-  private val f = 1.0 / 298.257222101
-  private val e2 = f * (2 - f)
-  private val e = math.sqrt(e2)
-  // EPSG:2154 definition
-  private val lat0 = math.toRadians(46.5)
-  private val lon0 = math.toRadians(3.0)
-  private val lat1 = math.toRadians(49.0)
-  private val lat2 = math.toRadians(44.0)
-  private val fe = 700000.0
-  private val fn = 6600000.0
-
-  private def m(phi: Double): Double =
-    math.cos(phi) / math.sqrt(1 - e2 * math.sin(phi) * math.sin(phi))
-  private def t(phi: Double): Double =
-    math.tan(math.Pi / 4 - phi / 2) /
-      math.pow((1 - e * math.sin(phi)) / (1 + e * math.sin(phi)), e / 2)
-
-  private val n = math.log(m(lat1) / m(lat2)) / math.log(t(lat1) / t(lat2))
-  private val bigF = m(lat1) / (n * math.pow(t(lat1), n))
-  private val rho0 = a * bigF * math.pow(t(lat0), n)
-
-  /** lon/lat (deg, EPSG:4326) → (easting, northing) EPSG:2154. */
-  def fromLonLat(lon: Double, lat: Double): (Double, Double) = {
-    val phi = math.toRadians(lat); val lam = math.toRadians(lon)
-    val rho = a * bigF * math.pow(t(phi), n)
-    val theta = n * (lam - lon0)
-    (fe + rho * math.sin(theta), fn + rho0 - rho * math.cos(theta))
-  }
-
-  /** (easting, northing) EPSG:2154 → lon/lat (deg). */
-  def toLonLat(x: Double, y: Double): (Double, Double) = {
-    val dx = x - fe; val dy = rho0 - (y - fn)
-    val rho = math.signum(n) * math.sqrt(dx * dx + dy * dy)
-    val tp = math.pow(rho / (a * bigF), 1 / n)
-    val theta = math.atan2(dx, dy)
-    val lam = theta / n + lon0
-    // iterate Snyder 7-9; converges in a handful of rounds
-    var phi = math.Pi / 2 - 2 * math.atan(tp)
-    var i = 0
-    while (i < 8) {
-      val es = e * math.sin(phi)
-      phi = math.Pi / 2 -
-        2 * math.atan(tp * math.pow((1 - es) / (1 + es), e / 2))
-      i += 1
-    }
-    (math.toDegrees(lam), math.toDegrees(phi))
-  }
-}
-
-/** CRS dispatch for driver-side vertex transforms: EPSG:4326, UTM
-  * (WGS84 326xx/327xx and ETRS89 258xx), LAEA Europe (3035), Web-Mercator
-  * (3857), Lambert-93 (2154) as pinned fast paths, plus every code in the
-  * parameterized [[Proj]] registry (27700, 2193, 3034, 3978, 31370,
-  * 31467, NAD83 UTM 269xx — TM/LCC/LAEA with optional Helmert datum
-  * shift). Anything else raises the typed openEO error the reference
-  * surfaces through pyproj failures. */
+/** CRS dispatch for driver-side vertex transforms and the per-row
+  * `graft_reproject` expression: every code in the [[Proj]] registry
+  * (EPSG:4326, WGS84/ETRS89 UTM, LAEA Europe, Web-Mercator, Lambert-93,
+  * the national grids and polar/Albers codes), all transforms going
+  * through WGS84 degrees — the reference hands every CRS to pyproj
+  * (openeo_odc_driver.py:1036-1078). Anything else raises the typed
+  * openEO error the reference surfaces through pyproj failures. */
 object Crs {
-  private def legacy(epsg: Int): Boolean =
-    epsg == 4326 || epsg == 3035 || epsg == 3857 || epsg == 2154 ||
-      (epsg >= 32601 && epsg <= 32660) || (epsg >= 32701 && epsg <= 32760) ||
-      (epsg >= 25828 && epsg <= 25838)
+  def supported(epsg: Int): Boolean = Proj.forEpsg(epsg).isDefined
 
-  def supported(epsg: Int): Boolean =
-    legacy(epsg) || Proj.forEpsg(epsg).isDefined
+  /** The registry definition of `epsg`, or the typed openEO error. */
+  def projDef(epsg: Int): ProjDef =
+    Proj.forEpsg(epsg).getOrElse(throw graft.OpenEoError.crsNotSupported(epsg))
 
   /** Point transform between supported CRSs (via 4326). */
   def transformPoint(x: Double, y: Double, fromEpsg: Int,
       toEpsg: Int): (Double, Double) =
     if (fromEpsg == toEpsg) (x, y)
-    else fromWgs(toWgs((x, y), fromEpsg), toEpsg)
+    else transformPoint(x, y, projDef(fromEpsg), projDef(toEpsg))
 
-  private def toWgs(p: (Double, Double), epsg: Int): (Double, Double) = epsg match {
-    case 4326 => p
-    case 3035 => Laea.toLonLat(p._1, p._2)
-    case 3857 => WebMercator.toLonLat(p._1, p._2)
-    case 2154 => Lambert93.toLonLat(p._1, p._2)
-    case utm if legacy(utm) => Utm.toLonLat(p._1, p._2, utm)
-    case other => Proj.forEpsg(other) match {
-      case Some(pd) => pd.toLonLat(p._1, p._2)
-      case None => throw graft.OpenEoError.crsNotSupported(other)
-    }
-  }
-  private def fromWgs(p: (Double, Double), epsg: Int): (Double, Double) = epsg match {
-    case 4326 => p
-    case 3035 => Laea.fromLonLat(p._1, p._2)
-    case 3857 => WebMercator.fromLonLat(p._1, p._2)
-    case 2154 => Lambert93.fromLonLat(p._1, p._2)
-    case utm if legacy(utm) => Utm.fromLonLat(p._1, p._2, utm)
-    case other => Proj.forEpsg(other) match {
-      case Some(pd) => pd.fromLonLat(p._1, p._2)
-      case None => throw graft.OpenEoError.crsNotSupported(other)
-    }
+  /** Point transform between two resolved definitions (via 4326) — the
+    * per-row form: callers resolve both definitions once. */
+  def transformPoint(x: Double, y: Double, from: ProjDef,
+      to: ProjDef): (Double, Double) = {
+    val (lon, lat) = from.toLonLat(x, y)
+    to.fromLonLat(lon, lat)
   }
 
   /** Transform a ring between any two supported CRSs (via 4326). */
   def transformRing(ring: Geo.Ring, fromEpsg: Int, toEpsg: Int): Geo.Ring =
     if (fromEpsg == toEpsg) ring
-    else ring.map(p => fromWgs(toWgs(p, fromEpsg), toEpsg))
+    else {
+      val (from, to) = (projDef(fromEpsg), projDef(toEpsg))
+      ring.map(p => transformPoint(p._1, p._2, from, to))
+    }
 
   /** Transform a ring from any [[CrsRef]] (EPSG code or proj-string
     * definition) into a registered EPSG CRS. */

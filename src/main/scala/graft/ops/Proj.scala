@@ -1,18 +1,17 @@
 package graft.ops
 
-/** Parameterized map projections + datum shifts — the general CRS path.
+/** Parameterized map projections + datum shifts — the one CRS
+  * implementation.
   *
   * The reference accepts any pyproj CRS for spatial extents
-  * (openeo_odc_driver.py:1036-1078); rounds 1-2 covered the common codes
-  * with fixed-parameter objects (Utm/Laea/WebMercator/Lambert93 in
-  * Geo.scala — those stay as the pinned fast paths for the oracled
-  * queries). This module generalizes the same public Snyder formulas
-  * (USGS PP 1395) over explicit parameters, adds the 7-parameter Helmert
-  * datum shift (position-vector convention, the published EPSG method for
-  * legacy datums like OSGB36/DHDN), a registry of well-known non-WGS84
-  * EPSG codes, and a proj-string parser — so a bbox in e.g. the British
-  * National Grid (EPSG:27700) or any `+proj=tmerc/lcc/laea/utm/merc`
-  * definition transforms without a new code path.
+  * (openeo_odc_driver.py:1036-1078). This module implements the public
+  * Snyder formulas (USGS PP 1395) over explicit parameters, the
+  * 7-parameter Helmert datum shift (position-vector convention, the
+  * published EPSG method for legacy datums like OSGB36/DHDN), a registry
+  * of EPSG codes (4326, UTM, 3035, 3857, 2154 and the national grids), and
+  * a proj-string parser — so a bbox in e.g. the British National Grid
+  * (EPSG:27700) or any `+proj=tmerc/lcc/laea/utm/merc` definition
+  * transforms through the same code as a UTM one.
   *
   * Everything here is driver-side vertex math (4 bbox corners, polygon
   * rings): accuracy ~1e-2 m from the series truncation, far below a
@@ -431,18 +430,24 @@ final case class AlbersEqualArea(ell: Ellipsoid, lat0Deg: Double,
 }
 
 /** Spherical Mercator with free radius/offsets (Web-Mercator is R=a(WGS84),
-  * zero offsets). Latitudes clamp at the square-world edge like 3857. */
+  * zero offsets; Snyder p. 41). Latitudes beyond the square-world edge
+  * CLAMP to ±Limit (the universal Web-Mercator convention — a whole-world
+  * bbox with north=90 must map to the top edge, not crash). */
 final case class SphericalMercator(r: Double, fe: Double, fn: Double)
     extends Projection {
-  private val limit = 85.051128779806604
+  import SphericalMercator.Limit
   def forward(lonDeg: Double, latDeg: Double): (Double, Double) = {
-    val cl = math.max(-limit, math.min(limit, latDeg))
+    val cl = math.max(-Limit, math.min(Limit, latDeg))
     (fe + r * math.toRadians(lonDeg),
       fn + r * math.log(math.tan(math.Pi / 4 + math.toRadians(cl) / 2)))
   }
   def inverse(x: Double, y: Double): (Double, Double) =
     (math.toDegrees((x - fe) / r),
       math.toDegrees(2 * math.atan(math.exp((y - fn) / r)) - math.Pi / 2))
+}
+
+object SphericalMercator {
+  val Limit = 85.051128779806604 // atan(sinh(pi)) — the square world edge
 }
 
 /** Geographic "projection": degrees in, degrees out. */
@@ -458,30 +463,49 @@ final case class ProjDef(proj: Projection, ell: Ellipsoid,
     toWgs84: Option[Helmert]) {
 
   /** WGS84 lon/lat degrees → projected (x, y). */
-  def fromLonLat(lon: Double, lat: Double): (Double, Double) = {
-    val (lo, la) = toWgs84 match {
-      case Some(h) => h.shift(lon, lat, Ellipsoid.Wgs84, ell, sign = -1.0)
-      case None => (lon, lat)
-    }
-    proj.forward(lo, la)
+  def fromLonLat(lon: Double, lat: Double): (Double, Double) = toWgs84 match {
+    case Some(h) =>
+      val (lo, la) = h.shift(lon, lat, Ellipsoid.Wgs84, ell, sign = -1.0)
+      proj.forward(lo, la)
+    case None => proj.forward(lon, lat)
   }
 
   /** Projected (x, y) → WGS84 lon/lat degrees. */
-  def toLonLat(x: Double, y: Double): (Double, Double) = {
-    val (lo, la) = proj.inverse(x, y)
-    toWgs84 match {
-      case Some(h) => h.shift(lo, la, ell, Ellipsoid.Wgs84, sign = 1.0)
-      case None => (lo, la)
-    }
+  def toLonLat(x: Double, y: Double): (Double, Double) = toWgs84 match {
+    case Some(h) =>
+      val (lo, la) = proj.inverse(x, y)
+      h.shift(lo, la, ell, Ellipsoid.Wgs84, sign = 1.0)
+    case None => proj.inverse(x, y)
   }
 }
 
 object Proj {
   import Ellipsoid._
 
-  /** Registry of well-known EPSG codes beyond the fixed-parameter fast
-    * paths in Geo.scala. All parameters are the published EPSG values. */
+  /** UTM zone and hemisphere (true = north) of a WGS84 (326xx/327xx) or
+    * ETRS89 (258xx) UTM code; None for any other code. */
+  def utmZone(epsg: Int): Option[(Int, Boolean)] =
+    if (epsg >= 32601 && epsg <= 32660) Some((epsg - 32600, true))
+    else if (epsg >= 32701 && epsg <= 32760) Some((epsg - 32700, false))
+    else if (epsg >= 25828 && epsg <= 25838) Some((epsg - 25800, true))
+    else None
+
+  /** Registry of supported EPSG codes. All parameters are the published
+    * EPSG values. */
   def forEpsg(epsg: Int): Option[ProjDef] = epsg match {
+    case 4326 => Some(ProjDef(GeographicCrs, Wgs84, None))
+    // ETRS89-extended / LAEA Europe, the EU-wide EO grid
+    case 3035 => Some(ProjDef(
+      LambertAzimuthalEA(Grs80, 52.0, 10.0, 4321000.0, 3210000.0),
+      Grs80, None))
+    // WGS84 / Pseudo-Mercator: the projection is DEFINED on the sphere
+    // R = a(WGS84), so geodetic latitude on that sphere is exact 3857
+    case 3857 => Some(ProjDef(SphericalMercator(Wgs84.a, 0.0, 0.0),
+      Wgs84, None))
+    // RGF93 / Lambert-93 (ETRS89-aligned: no datum shift at bbox accuracy)
+    case 2154 => Some(ProjDef(
+      LambertConformal2SP(Grs80, 46.5, 3.0, 49.0, 44.0, 700000.0, 6600000.0),
+      Grs80, None))
     // OSGB36 / British National Grid (Airy 1830 + Helmert)
     case 27700 => Some(ProjDef(
       TransverseMercator(Airy1830, 49.0, -2.0, 0.9996012717, 400000.0, -100000.0),
@@ -541,7 +565,15 @@ object Proj {
       Bessel1841,
       Some(Helmert(565.417, 50.3319, 465.552,
         -0.398957, 0.343988, -1.8774, 4.0725))))
-    case _ => None
+    // WGS84 / UTM (326xx north, 327xx south) and ETRS89 / UTM (258xx).
+    // 258xx is on GRS80, but GRS80 and WGS84 share the semi-major axis
+    // and differ in flattening by <1e-9 (sub-mm on the ground) — far
+    // below the Snyder series' own ~1e-2 m truncation, so the WGS84
+    // constants serve both
+    case other => utmZone(other).map { case (zone, north) =>
+      ProjDef(TransverseMercator(Wgs84, 0.0, zone * 6 - 183, 0.9996,
+        500000.0, if (north) 0.0 else 10000000.0), Wgs84, None)
+    }
   }
 
   /** Parse a proj-string (`+proj=tmerc +lat_0=49 +lon_0=-2 ...`) into a

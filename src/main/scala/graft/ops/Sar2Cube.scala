@@ -35,7 +35,7 @@ object Sar2Cube {
   def tmConstants(epsg: Int): Map[String, Double] = {
     val aa = 6378137.0; val ff = 1.0 / 298.257223563
     val e2 = ff * (2 - ff); val ep2 = e2 / (1 - e2)
-    val (zone, _) = Utm.epsgToZone(epsg)
+    val (zone, _) = utmZone(epsg)
     Map(
       "aa" -> aa, "e2" -> e2, "ep2" -> ep2, "k0" -> 0.9996,
       "lam0" -> math.toRadians(zone * 6 - 183),
@@ -46,12 +46,16 @@ object Sar2Cube {
       "c58" -> 58 * ep2, "c330" -> 330 * ep2)
   }
 
+  private def utmZone(epsg: Int): (Int, Boolean) = Proj.utmZone(epsg)
+    .getOrElse(throw new IllegalArgumentException(s"not a UTM EPSG code: $epsg"))
+
   /** Snyder Transverse-Mercator forward as Column expressions. Mirrors
-    * [[Utm.fromLonLat]] term for term. */
+    * [[TransverseMercator.forward]] on the UTM registry entries term for
+    * term. */
   def utmFromLonLatCols(lonDeg: Column, latDeg: Column, epsg: Int): (Column, Column) = {
     val aa = 6378137.0; val ff = 1.0 / 298.257223563
     val e2 = ff * (2 - ff); val ep2 = e2 / (1 - e2); val k0 = 0.9996
-    val (zone, north) = Utm.epsgToZone(epsg)
+    val (zone, north) = utmZone(epsg)
     val lam0 = math.toRadians(zone * 6 - 183)
     val phi = radians(latDeg); val lam = radians(lonDeg)
     val sinp = sin(phi); val cosp = cos(phi); val tanp = tan(phi)

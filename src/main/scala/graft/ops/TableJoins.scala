@@ -146,10 +146,7 @@ object TableJoins {
     require(keys.nonEmpty, "asofJoinNative needs at least one key")
     require(payload.nonEmpty, "asofJoinNative needs payload columns")
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies
-        .exists(_ eq graft.plans.AsofJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsofJoinStrategy
+    graft.GraftExtensions.registerAll(spark)
     val lPlan = left.queryExecution.analyzed
     // fresh exprIds on the right: self-joins (both sides filtered from
     // one source) would otherwise carry duplicate attribute ids across

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 
 /** The SQL front door: GraftExtensions must expose every native graft_*
@@ -51,6 +52,41 @@ class ExtensionsSpec extends SparkSpec {
       names should contain allOf ("graft_dot", "graft_simhash64",
         "graft_minhash_text", "graft_bloom_agg", "graft_might_contain",
         "graft_reproject", "graft_hll_parts", "graft_cms_buckets")
+    } finally {
+      prevActive.foreach(SparkSession.setActiveSession)
+      prevDefault.foreach(SparkSession.setDefaultSession)
+    }
+  }
+
+  test("a session built WITHOUT GraftExtensions gets functions, strategy " +
+      "and rule from one Column-API call") {
+    spark.sparkContext // force the shared context up first
+    val prevActive = SparkSession.getActiveSession
+    val prevDefault = SparkSession.getDefaultSession
+    try {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      val s2 = SparkSession.builder()
+        .master("local[4]")
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+      val registry = s2.sessionState.functionRegistry
+      registry.functionExists(FunctionIdentifier("graft_dot")) shouldBe false
+      val d = graft.functions.DotProduct.dot(col("a"), col("b"))
+      GraftExtensions.functionInjections.foreach { case (id, _, _) =>
+        registry.functionExists(id) shouldBe true }
+      s2.experimental.extraStrategies
+        .count(_ eq graft.plans.AsofJoinStrategy) shouldBe 1
+      s2.experimental.extraOptimizations
+        .count(_ eq graft.plans.BandJoinRule) shouldBe 1
+      // idempotent: a second call adds nothing
+      graft.functions.TextHashExprs.fnvBucket(col("a"), 64)
+      s2.experimental.extraStrategies.size shouldBe 1
+      s2.experimental.extraOptimizations.size shouldBe 1
+      import s2.implicits._
+      Seq((Array(1.0f, 2.0f), Array(3.0f, 4.0f))).toDF("a", "b")
+        .select(d).head().getDouble(0) shouldBe 11.0
     } finally {
       prevActive.foreach(SparkSession.setActiveSession)
       prevDefault.foreach(SparkSession.setDefaultSession)

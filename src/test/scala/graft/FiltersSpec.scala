@@ -1,26 +1,26 @@
 package graft
 
 import graft.cube.{Cube, Dim}
-import graft.ops.{Filters, Geo, Laea, Utm}
+import graft.ops.{Crs, Filters, Geo, SphericalMercator}
 import org.apache.spark.sql.functions._
 
 class FiltersSpec extends SparkSpec {
 
   test("LAEA (EPSG:3035): false origin is exact; transforms roundtrip") {
-    val (x0, y0) = Laea.fromLonLat(10.0, 52.0)
+    val (x0, y0) = Crs.transformPoint(10.0, 52.0, 4326, 3035)
     x0 shouldBe 4321000.0 +- 1e-6
     y0 shouldBe 3210000.0 +- 1e-6
     for ((lo, la) <- Seq((11.3, 46.5), (-9.1, 38.7), (24.9, 60.2))) {
-      val (x, y) = Laea.fromLonLat(lo, la)
-      val (lo2, la2) = Laea.toLonLat(x, y)
+      val (x, y) = Crs.transformPoint(lo, la, 4326, 3035)
+      val (lo2, la2) = Crs.transformPoint(x, y, 3035, 4326)
       lo2 shouldBe lo +- 1e-9
       la2 shouldBe la +- 1e-9
     }
   }
 
   test("filter_bbox on an EPSG:3035 cube reprojects the 4326 bbox (LAEA)") {
-    val (x1, y1) = Laea.fromLonLat(11.30, 46.50) // inside the bbox below
-    val (x2, y2) = Laea.fromLonLat(11.60, 46.80) // outside
+    val (x1, y1) = Crs.transformPoint(11.30, 46.50, 4326, 3035) // inside the bbox below
+    val (x2, y2) = Crs.transformPoint(11.60, 46.80, 4326, 3035) // outside
     val c0 = cubeOf(
       ("2024-01-01", "B04", y1, x1, 1.0),
       ("2024-01-01", "B04", y2, x2, 2.0))
@@ -31,31 +31,29 @@ class FiltersSpec extends SparkSpec {
   }
 
   test("Web-Mercator (EPSG:3857): known point is exact; transforms roundtrip") {
-    import graft.ops.WebMercator
     // canonical check: lon 180° maps to pi*R
-    val (xe, _) = WebMercator.fromLonLat(180.0, 0.0)
+    val (xe, _) = Crs.transformPoint(180.0, 0.0, 4326, 3857)
     xe shouldBe 20037508.342789244 +- 1e-6
-    val (_, ye) = WebMercator.fromLonLat(0.0, WebMercator.Limit)
+    val (_, ye) = Crs.transformPoint(0.0, SphericalMercator.Limit, 4326, 3857)
     ye shouldBe 20037508.342789244 +- 1e-5 // square world: top edge == right edge
     for ((lo, la) <- Seq((11.3, 46.5), (-122.4, 37.8), (151.2, -33.9))) {
-      val (x, y) = WebMercator.fromLonLat(lo, la)
-      val (lo2, la2) = WebMercator.toLonLat(x, y)
+      val (x, y) = Crs.transformPoint(lo, la, 4326, 3857)
+      val (lo2, la2) = Crs.transformPoint(x, y, 3857, 4326)
       lo2 shouldBe lo +- 1e-9
       la2 shouldBe la +- 1e-9
     }
     // beyond the square-world edge latitudes CLAMP (the universal
     // Web-Mercator convention): a whole-world bbox must map to the top
     // edge, not crash
-    WebMercator.fromLonLat(0.0, 90.0)._2 shouldBe
-      WebMercator.fromLonLat(0.0, WebMercator.Limit)._2
-    WebMercator.fromLonLat(0.0, -90.0)._2 shouldBe
-      WebMercator.fromLonLat(0.0, -WebMercator.Limit)._2
+    Crs.transformPoint(0.0, 90.0, 4326, 3857)._2 shouldBe
+      Crs.transformPoint(0.0, SphericalMercator.Limit, 4326, 3857)._2
+    Crs.transformPoint(0.0, -90.0, 4326, 3857)._2 shouldBe
+      Crs.transformPoint(0.0, -SphericalMercator.Limit, 4326, 3857)._2
   }
 
   test("filter_bbox on an EPSG:3857 cube reprojects the 4326 bbox") {
-    import graft.ops.WebMercator
-    val (x1, y1) = WebMercator.fromLonLat(11.30, 46.50) // inside the bbox
-    val (x2, y2) = WebMercator.fromLonLat(11.60, 46.80) // outside
+    val (x1, y1) = Crs.transformPoint(11.30, 46.50, 4326, 3857) // inside the bbox
+    val (x2, y2) = Crs.transformPoint(11.60, 46.80, 4326, 3857) // outside
     val c0 = cubeOf(
       ("2024-01-01", "B04", y1, x1, 1.0),
       ("2024-01-01", "B04", y2, x2, 2.0))
@@ -66,14 +64,13 @@ class FiltersSpec extends SparkSpec {
   }
 
   test("Lambert-93 (EPSG:2154): projection origin is exact; transforms roundtrip") {
-    import graft.ops.Lambert93
     // the false origin sits at (lon0, lat0) = (3°E, 46.5°N) by definition
-    val (x0, y0) = Lambert93.fromLonLat(3.0, 46.5)
+    val (x0, y0) = Crs.transformPoint(3.0, 46.5, 4326, 2154)
     x0 shouldBe 700000.0 +- 1e-6
     y0 shouldBe 6600000.0 +- 1e-6
     for ((lo, la) <- Seq((2.35, 48.86), (-1.55, 47.22), (5.37, 43.30))) {
-      val (x, y) = Lambert93.fromLonLat(lo, la)
-      val (lo2, la2) = Lambert93.toLonLat(x, y)
+      val (x, y) = Crs.transformPoint(lo, la, 4326, 2154)
+      val (lo2, la2) = Crs.transformPoint(x, y, 2154, 4326)
       lo2 shouldBe lo +- 1e-9
       la2 shouldBe la +- 1e-9
     }
@@ -85,8 +82,8 @@ class FiltersSpec extends SparkSpec {
     val aa = 6378137.0; val ee2 = 1.0 / 298.257222101 * (2 - 1.0 / 298.257222101)
     for (latSP <- Seq(44.0, 49.0)) {
       val phi = math.toRadians(latSP)
-      val (xA, yA) = Lambert93.fromLonLat(3.0, latSP)
-      val (xB, yB) = Lambert93.fromLonLat(3.001, latSP)
+      val (xA, yA) = Crs.transformPoint(3.0, latSP, 4326, 2154)
+      val (xB, yB) = Crs.transformPoint(3.001, latSP, 4326, 2154)
       val projected = math.hypot(xB - xA, yB - yA)
       val arc = aa * math.cos(phi) /
         math.sqrt(1 - ee2 * math.sin(phi) * math.sin(phi)) *
@@ -97,17 +94,16 @@ class FiltersSpec extends SparkSpec {
 
   test("ETRS89 UTM (EPSG:25832) transforms agree with WGS84 UTM zone 32") {
     // same zone, ellipsoids differ sub-mm — the dispatch must accept 258xx
-    val (e1, n1) = Utm.fromLonLat(11.3, 46.5, 25832)
-    val (e2, n2) = Utm.fromLonLat(11.3, 46.5, 32632)
+    val (e1, n1) = Crs.transformPoint(11.3, 46.5, 4326, 25832)
+    val (e2, n2) = Crs.transformPoint(11.3, 46.5, 4326, 32632)
     e1 shouldBe e2 +- 1e-6
     n1 shouldBe n2 +- 1e-6
     graft.ops.Crs.supported(25832) shouldBe true
   }
 
   test("filter_bbox on an EPSG:2154 cube reprojects the 4326 bbox") {
-    import graft.ops.Lambert93
-    val (x1, y1) = Lambert93.fromLonLat(2.35, 48.86) // inside (Paris)
-    val (x2, y2) = Lambert93.fromLonLat(5.37, 43.30) // outside (Marseille)
+    val (x1, y1) = Crs.transformPoint(2.35, 48.86, 4326, 2154) // inside (Paris)
+    val (x2, y2) = Crs.transformPoint(5.37, 43.30, 4326, 2154) // outside (Marseille)
     val c0 = cubeOf(
       ("2024-01-01", "B04", y1, x1, 1.0),
       ("2024-01-01", "B04", y2, x2, 2.0))
@@ -194,12 +190,12 @@ class FiltersSpec extends SparkSpec {
   }
 
   test("UTM round-trip accuracy ~1e-2 m (Snyder series)") {
-    val (e, n) = Utm.fromLonLat(11.35, 46.5, 32632) // Bolzano, zone 32N
-    val (lon, lat) = Utm.toLonLat(e, n, 32632)
+    val (e, n) = Crs.transformPoint(11.35, 46.5, 4326, 32632) // Bolzano, zone 32N
+    val (lon, lat) = Crs.transformPoint(e, n, 32632, 4326)
     math.abs(lon - 11.35) should be < 1e-6
     math.abs(lat - 46.5) should be < 1e-6
     // known fixed point: zone central meridian at equator → easting 500000
-    val (e0, n0) = Utm.fromLonLat(9.0, 0.0, 32632)
+    val (e0, n0) = Crs.transformPoint(9.0, 0.0, 4326, 32632)
     math.abs(e0 - 500000.0) should be < 1e-6
     math.abs(n0) should be < 1e-6
   }

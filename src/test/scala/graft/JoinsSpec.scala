@@ -1,7 +1,7 @@
 package graft
 
 import graft.cube.{Cube, Dim, GridRef}
-import graft.ops.{Filters, Joins}
+import graft.ops.{Crs, Filters, Joins}
 import org.apache.spark.sql.functions._
 
 class JoinsSpec extends SparkSpec {
@@ -75,7 +75,7 @@ class JoinsSpec extends SparkSpec {
     // points; reprojecting to 4326 must recover the lon/lat (within the
     // Snyder series' accuracy)
     val pts = Seq((11.3, 46.5), (11.6, 46.8))
-    val utm = pts.map { case (lo, la) => graft.ops.Utm.fromLonLat(lo, la, 32632) }
+    val utm = pts.map { case (lo, la) => Crs.transformPoint(lo, la, 4326, 32632) }
     val c0 = cubeOf(
       ("2024-01-01", "B", utm(0)._2, utm(0)._1, 1.0),
       ("2024-01-01", "B", utm(1)._2, utm(1)._1, 2.0))
@@ -88,6 +88,22 @@ class JoinsSpec extends SparkSpec {
       lo shouldBe wlo +- 1e-6
       la shouldBe wla +- 1e-6
     }
+  }
+
+  test("graft_reproject to EPSG:27700 matches Crs.transformPoint row by row") {
+    import spark.implicits._
+    // a registry code with a Helmert datum shift (OSGB36), both directions
+    val pts = Seq((-0.13, 51.51), (-3.19, 55.95), (-5.93, 54.6), (1.3, 52.63))
+    val bng = pts.toDF("lon", "lat")
+      .select(graft.functions.GeoExprs.reproject(
+        col("lon"), col("lat"), 4326, 27700).as("p"))
+      .select("p.x", "p.y").as[(Double, Double)].collect().toSeq
+    bng shouldBe pts.map { case (lo, la) => Crs.transformPoint(lo, la, 4326, 27700) }
+    val back = bng.toDF("x", "y")
+      .select(graft.functions.GeoExprs.reproject(
+        col("x"), col("y"), 27700, 4326).as("p"))
+      .select("p.x", "p.y").as[(Double, Double)].collect().toSeq
+    back shouldBe bng.map { case (x, y) => Crs.transformPoint(x, y, 27700, 4326) }
   }
 
   test("resample_cube_temporal: nearest as-of relabel onto the target axis") {

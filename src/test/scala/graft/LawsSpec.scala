@@ -1,7 +1,7 @@
 package graft
 
 import graft.cube.{Cube, Dim}
-import graft.ops.{Filters, Joins, Laea, Utm}
+import graft.ops.{Crs, Filters, Joins}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, rng}
 
@@ -248,15 +248,15 @@ class LawsSpec extends SparkSpec {
   test("law: UTM and LAEA roundtrip over the projection's valid domain") {
     val utmPt = Gen.zip(Gen.choose(6.5, 11.5), Gen.choose(-75.0, 80.0))
     sample(utmPt, 40).foreach { case (lon, lat) =>
-      val (x, y) = Utm.fromLonLat(lon, lat, 32632)
-      val (lo2, la2) = Utm.toLonLat(x, y, 32632)
+      val (x, y) = Crs.transformPoint(lon, lat, 4326, 32632)
+      val (lo2, la2) = Crs.transformPoint(x, y, 32632, 4326)
       lo2 shouldBe lon +- 1e-7
       la2 shouldBe lat +- 1e-7
     }
     val laeaPt = Gen.zip(Gen.choose(-10.0, 30.0), Gen.choose(35.0, 70.0))
     sample(laeaPt, 40).foreach { case (lon, lat) =>
-      val (x, y) = Laea.fromLonLat(lon, lat)
-      val (lo2, la2) = Laea.toLonLat(x, y)
+      val (x, y) = Crs.transformPoint(lon, lat, 4326, 3035)
+      val (lo2, la2) = Crs.transformPoint(x, y, 3035, 4326)
       lo2 shouldBe lon +- 1e-8
       la2 shouldBe lat +- 1e-8
     }

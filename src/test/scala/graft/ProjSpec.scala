@@ -8,14 +8,22 @@ class ProjSpec extends SparkSpec {
   private val samplePoints = Seq(
     (9.05, 48.52), (11.3, 46.5), (7.8, 51.1), (10.0, 50.0))
 
-  test("generic TransverseMercator reproduces the pinned UTM fast path") {
+  // Golden outputs of the earlier fixed-parameter UTM / Lambert-93 /
+  // LAEA implementations at these sample points: the parameterized
+  // classes and the registry reproduce them bit for bit.
+  private val utm32Golden = Seq(
+    (503692.13923207036, 5374099.899188137),
+    (676480.9218737711, 5152173.458263671),
+    (415978.904063794, 5661630.157455167),
+    (571666.447503449, 5539109.815705419))
+
+  test("generic TransverseMercator reproduces the golden UTM outputs") {
     val utm32 = TransverseMercator(Ellipsoid.Wgs84, 0.0, 9.0, 0.9996,
       500000.0, 0.0)
-    for ((lo, la) <- samplePoints) {
+    for (((lo, la), golden) <- samplePoints.zip(utm32Golden)) {
       val (xg, yg) = utm32.forward(lo, la)
-      val (xl, yl) = Utm.fromLonLat(lo, la, 32632)
-      xg shouldBe xl +- 1e-6
-      yg shouldBe yl +- 1e-6
+      (xg, yg) shouldBe golden
+      Crs.transformPoint(lo, la, 4326, 32632) shouldBe golden
       val (lo2, la2) = utm32.inverse(xg, yg)
       lo2 shouldBe lo +- 1e-8 // Snyder series truncation (~1 mm)
       la2 shouldBe la +- 1e-8
@@ -23,31 +31,36 @@ class ProjSpec extends SparkSpec {
     // southern hemisphere false northing
     val utm33s = TransverseMercator(Ellipsoid.Wgs84, 0.0, 15.0, 0.9996,
       500000.0, 10000000.0)
-    val (xs, ys) = utm33s.forward(16.4, -33.9)
-    val (xl, yl) = Utm.fromLonLat(16.4, -33.9, 32733)
-    xs shouldBe xl +- 1e-6
-    ys shouldBe yl +- 1e-6
+    val golden33s = (629443.1750237456, 6248049.584295082)
+    utm33s.forward(16.4, -33.9) shouldBe golden33s
+    Crs.transformPoint(16.4, -33.9, 4326, 32733) shouldBe golden33s
   }
 
-  test("generic LCC-2SP reproduces the pinned Lambert-93 fast path") {
+  test("generic LCC-2SP reproduces the golden Lambert-93 outputs") {
     val l93 = LambertConformal2SP(Ellipsoid.Grs80, 46.5, 3.0, 49.0, 44.0,
       700000.0, 6600000.0)
-    for ((lo, la) <- Seq((2.35, 48.85), (5.37, 43.3), (-1.55, 47.22))) {
-      val (xg, yg) = l93.forward(lo, la)
-      val (xl, yl) = Lambert93.fromLonLat(lo, la)
-      xg shouldBe xl +- 1e-6
-      yg shouldBe yl +- 1e-6
+    val golden = Seq(
+      (652301.5648305281, 6861302.725899576),
+      (892394.7774196876, 6247424.645813702),
+      (355860.02969167865, 6689884.836136014))
+    for (((lo, la), g) <- Seq((2.35, 48.85), (5.37, 43.3), (-1.55, 47.22))
+        .zip(golden)) {
+      l93.forward(lo, la) shouldBe g
+      Crs.transformPoint(lo, la, 4326, 2154) shouldBe g
     }
   }
 
-  test("generic LAEA reproduces the pinned EPSG:3035 fast path") {
+  test("generic LAEA reproduces the golden EPSG:3035 outputs") {
     val laea = LambertAzimuthalEA(Ellipsoid.Grs80, 52.0, 10.0,
       4321000.0, 3210000.0)
-    for ((lo, la) <- samplePoints) {
-      val (xg, yg) = laea.forward(lo, la)
-      val (xl, yl) = Laea.fromLonLat(lo, la)
-      xg shouldBe xl +- 1e-6
-      yg shouldBe yl +- 1e-6
+    val golden = Seq(
+      (4250795.7733572, 2823404.371953424),
+      (4420890.148725535, 2599397.273083172),
+      (4166922.0179542704, 3112185.442459929),
+      (4321000.0, 2987510.566964945))
+    for (((lo, la), g) <- samplePoints.zip(golden)) {
+      laea.forward(lo, la) shouldBe g
+      Crs.transformPoint(lo, la, 4326, 3035) shouldBe g
     }
   }
 
@@ -108,11 +121,11 @@ class ProjSpec extends SparkSpec {
   }
 
   test("proj-string parser: utm/tmerc/lcc/longlat + malformed -> typed error") {
-    // +proj=utm == the UTM fast path
+    // +proj=utm == the EPSG:32632 registry entry
     val utm = Proj.parse("+proj=utm +zone=32 +ellps=WGS84")
     for ((lo, la) <- samplePoints) {
       val (xg, yg) = utm.fromLonLat(lo, la)
-      val (xl, yl) = Utm.fromLonLat(lo, la, 32632)
+      val (xl, yl) = Crs.transformPoint(lo, la, 4326, 32632)
       xg shouldBe xl +- 1e-6
       yg shouldBe yl +- 1e-6
     }
@@ -324,8 +337,8 @@ class ProjSpec extends SparkSpec {
 
   test("filter_bbox accepts a proj-string crs for the bbox") {
     import org.apache.spark.sql.functions._
-    val (x1, y1) = Utm.fromLonLat(11.30, 46.50, 32632) // inside
-    val (x2, y2) = Utm.fromLonLat(11.60, 46.80, 32632) // outside
+    val (x1, y1) = Crs.transformPoint(11.30, 46.50, 4326, 32632) // inside
+    val (x2, y2) = Crs.transformPoint(11.60, 46.80, 4326, 32632) // outside
     val c0 = cubeOf(
       ("2024-01-01", "B04", y1, x1, 1.0),
       ("2024-01-01", "B04", y2, x2, 2.0))

@@ -1,7 +1,7 @@
 package graft
 
 import graft.cube.{Cube, CubeMeta, Dim, GridRef}
-import graft.ops.{Sar2Cube, Utm}
+import graft.ops.{Crs, Sar2Cube}
 import org.apache.spark.sql.functions._
 
 class Sar2CubeSpec extends SparkSpec {
@@ -14,7 +14,7 @@ class Sar2CubeSpec extends SparkSpec {
     val got = df.select(e.as("e"), n.as("n")).collect()
       .map(r => (r.getDouble(0), r.getDouble(1)))
     pts.zip(got).foreach { case ((lon, lat), (ge, gn)) =>
-      val (we, wn) = Utm.fromLonLat(lon, lat, 32632)
+      val (we, wn) = Crs.transformPoint(lon, lat, 4326, 32632)
       ge shouldBe we +- 1e-6
       gn shouldBe wn +- 1e-6
     }
@@ -45,14 +45,14 @@ class Sar2CubeSpec extends SparkSpec {
     // 8 radar samples landing exactly on the centers of a 3×3 ring of
     // 10 m cells (center cell left empty). Delaunay-quality output must
     // interpolate the center; cells outside the ring must stay empty.
-    val (bx, by) = graft.ops.Utm.fromLonLat(11.35, 46.5, 32632)
+    val (bx, by) = Crs.transformPoint(11.35, 46.5, 4326, 32632)
     val cx0 = math.floor(bx / 10.0); val cy0 = math.floor(by / 10.0)
     val ring = for {
       oy <- -1 to 1; ox <- -1 to 1 if ox != 0 || oy != 0
     } yield (ox, oy)
     val rows = ring.zipWithIndex.flatMap { case ((ox, oy), i) =>
-      val (lon, lat) = graft.ops.Utm.toLonLat(
-        (cx0 + ox + 0.5) * 10.0, (cy0 + oy + 0.5) * 10.0, 32632)
+      val (lon, lat) = Crs.transformPoint(
+        (cx0 + ox + 0.5) * 10.0, (cy0 + oy + 0.5) * 10.0, 32632, 4326)
       Seq((t, "grid_lon", 0.0, i.toDouble, lon),
         (t, "grid_lat", 0.0, i.toDouble, lat),
         (t, "VV", 0.0, i.toDouble, 10.0 + i))
@@ -73,12 +73,12 @@ class Sar2CubeSpec extends SparkSpec {
       "(every cell center sampled)") {
     import spark.implicits._
     val t = ts("2024-01-01 00:00:00")
-    val (bx, by) = graft.ops.Utm.fromLonLat(11.35, 46.5, 32632)
+    val (bx, by) = Crs.transformPoint(11.35, 46.5, 4326, 32632)
     val cx0 = math.floor(bx / 10.0); val cy0 = math.floor(by / 10.0)
     val rows = (for { oy <- 0 until 5; ox <- 0 until 5 } yield {
       val i = oy * 5 + ox
-      val (lon, lat) = graft.ops.Utm.toLonLat(
-        (cx0 + ox + 0.5) * 10.0, (cy0 + oy + 0.5) * 10.0, 32632)
+      val (lon, lat) = Crs.transformPoint(
+        (cx0 + ox + 0.5) * 10.0, (cy0 + oy + 0.5) * 10.0, 32632, 4326)
       Seq((t, "grid_lon", 0.0, i.toDouble, lon),
         (t, "grid_lat", 0.0, i.toDouble, lat),
         (t, "VV", 0.0, i.toDouble, math.sin(ox * 0.3) + oy * 0.1))
@@ -98,7 +98,7 @@ class Sar2CubeSpec extends SparkSpec {
       "interior holes take the NEAREST value (not IDW), exterior stays empty") {
     import spark.implicits._
     val t = ts("2024-01-01 00:00:00")
-    val (bx, by) = graft.ops.Utm.fromLonLat(11.35, 46.5, 32632)
+    val (bx, by) = Crs.transformPoint(11.35, 46.5, 4326, 32632)
     val cx0 = math.floor(bx / 10.0); val cy0 = math.floor(by / 10.0)
     val centerX = (cx0 + 0.5) * 10.0; val centerY = (cy0 + 0.5) * 10.0
     // ring at ±14 m (1.4 cells) with margin ≫ UTM round-trip noise, so
@@ -108,8 +108,8 @@ class Sar2CubeSpec extends SparkSpec {
       (1.4, 1.4, 13.0), (1.4, -1.4, 14.0), (-1.4, 1.4, 15.0),
       (-1.4, -1.4, 16.0), (0.0, 1.1, 99.0))
     val rows = ring.zipWithIndex.flatMap { case ((ox, oy, v), i) =>
-      val (lon, lat) = graft.ops.Utm.toLonLat(
-        centerX + ox * 10.0, centerY + oy * 10.0, 32632)
+      val (lon, lat) = Crs.transformPoint(
+        centerX + ox * 10.0, centerY + oy * 10.0, 32632, 4326)
       Seq((t, "grid_lon", 0.0, i.toDouble, lon),
         (t, "grid_lat", 0.0, i.toDouble, lat),
         (t, "VV", 0.0, i.toDouble, v))
@@ -135,12 +135,12 @@ class Sar2CubeSpec extends SparkSpec {
       "(halo replication correct across tile borders)") {
     import spark.implicits._
     val t = ts("2024-01-01 00:00:00")
-    val (bx, by) = graft.ops.Utm.fromLonLat(11.35, 46.5, 32632)
+    val (bx, by) = Crs.transformPoint(11.35, 46.5, 4326, 32632)
     val cx0 = math.floor(bx / 10.0); val cy0 = math.floor(by / 10.0)
     val rows = (for { oy <- 0 until 12; ox <- 0 until 12 } yield {
       val i = oy * 12 + ox
-      val (lon, lat) = graft.ops.Utm.toLonLat(
-        (cx0 + ox + 0.5) * 10.0, (cy0 + oy + 0.5) * 10.0, 32632)
+      val (lon, lat) = Crs.transformPoint(
+        (cx0 + ox + 0.5) * 10.0, (cy0 + oy + 0.5) * 10.0, 32632, 4326)
       Seq((t, "grid_lon", 0.0, i.toDouble, lon),
         (t, "grid_lat", 0.0, i.toDouble, lat),
         (t, "VV", 0.0, i.toDouble, i * 0.25))

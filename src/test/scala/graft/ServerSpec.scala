@@ -188,6 +188,26 @@ class ServerSpec extends SparkSpec {
     body should include(""""message":"Division by zero""")
   }
 
+  test("POST /graph error bodies stay valid JSON for control characters") {
+    // \t, \r and U+0001 inside the crs string land verbatim in the typed
+    // error message; the body must parse back to that exact message
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val crs = "+proj=nope\t+a=1\u0001\r+b=2"
+    val graph = s"""{
+      "load": {"process_id": "load_collection", "arguments": {"id": "c1"}},
+      "bb": {"process_id": "filter_bbox", "arguments": {
+        "data": {"from_node": "load"},
+        "extent": {"west": -1, "south": -1, "east": 2, "north": 2,
+          "crs": ${json.writeValueAsString(crs)}}},
+        "result": true}
+    }"""
+    val (code, body) = http("POST", "/graph", graph)
+    code shouldBe 400
+    val err = json.readTree(body)
+    err.get("code").asText shouldBe "CrsNotSupported"
+    err.get("message").asText should endWith(crs)
+  }
+
   test("POST /graph with a bad graph returns a JSON error") {
     val (code, body) = http("POST", "/graph",
       """{"load": {"process_id": "load_collection",

@@ -671,4 +671,25 @@ class StreamingSpec extends SparkSpec {
       } finally q.stop()
     }
   }
+
+  test("a q_stream_* row restores the session's shuffle partitions") {
+    val docs = java.nio.file.Files.createTempDirectory("stream-parts").toString
+    Seq((1L, "a b"), (2L, "c d"), (3L, "a b")).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$docs/documents.parquet")
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    try {
+      for (before <- Seq("2", "4", "7")) {
+        spark.conf.set(key, before)
+        var during = ""
+        SparkEntry.withStreamShuffle { (s, _) =>
+          during = s.conf.get(key); s.range(1).toDF() }(spark, docs)
+        during shouldBe "4"
+        spark.conf.get(key) shouldBe before
+        SparkEntry.queries("q_stream_dedup_exact")(spark, docs)
+          .count() shouldBe 2
+        spark.conf.get(key) shouldBe before
+      }
+    } finally spark.conf.set(key, prev)
+  }
 }
