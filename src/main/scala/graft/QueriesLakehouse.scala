@@ -150,15 +150,14 @@ private[graft] object QueriesLakehouse {
         Seq("user_id", "event_type"), "value")
     }),
     "q_spatial_join" -> ((s, dir) => {
-      // 2-D binning trick: events scattered to pseudo-coordinates join
-      // three literal triangles via broadcast cell candidates + exact
-      // codegen ray-cast — one row per (point, containing polygon)
+      // events scattered to pseudo-coordinates join three literal
+      // triangles through the point-in-polygon kernel — one row per
+      // (point, containing polygon)
       val px = col("value") % lit(20.0)
       val py = (col("value") * lit(7.0)) % lit(20.0)
       val pts = readEvents(s, dir)
         .select(col("event_id"), px.as("px"), py.as("py"))
-      graft.ops.Geo.spatialJoin(pts, col("px"), col("py"),
-          spatialJoinPolys, cellSize = 4.0)
+      graft.ops.Geo.spatialJoin(pts, col("px"), col("py"), spatialJoinPolys)
         .select("event_id", "px", "py", "poly_id")
     }),
     "q_merge_changelog" -> ((s, dir) => {

@@ -971,9 +971,9 @@ object SparkEntry {
     2 -> Seq((8.0, 1.0), (19.0, 6.0), (11.0, 12.0)),
     3 -> Seq((0.0, 10.0), (9.0, 19.0), (1.0, 18.0)))
 
-  /** DuckDB replay of [[graft.ops.Geo.pointInRing]]: same crossing
-    * predicate, slope pre-divided to one double literal (shortest
-    * round-trip repr parses back exactly). */
+  /** DuckDB replay of the [[graft.ops.Geo.Polygons]] kernel: same
+    * crossing predicate and operation order, slope pre-divided to one
+    * double literal (shortest round-trip repr parses back exactly). */
   private[graft] def rayCastSql(px: String, py: String,
       ring: graft.ops.Geo.Ring): String = {
     val n = ring.length

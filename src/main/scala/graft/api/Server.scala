@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
-import java.util.concurrent.{ConcurrentHashMap, Executors}
+import java.util.concurrent.{CancellationException, CompletableFuture,
+  ConcurrentHashMap, ExecutionException, Executors}
 
 /** HTTP facade mirroring the reference's openEO backend surface
   * (odc_backend.py):
@@ -20,7 +21,9 @@ import java.util.concurrent.{ConcurrentHashMap, Executors}
   *
   * Reference → Spark mappings:
   *  - result cache: md5 of the graph string → artifact path
-  *    (odc_backend.py:62-85); here an in-memory + on-disk map.
+  *    (odc_backend.py:62-85); here one in-memory registry, md5 → future
+  *    path: the first POST runs the graph, identical POSTs wait on it
+  *    (`cached:true`), a failed or stopped run leaves the registry.
   *  - cancellation: the reference kills the worker PROCESS via the jobs
   *    CSV (odc_backend.py:105-120, workable only because gunicorn runs
   *    max_requests=1); here jobs run in one shared SparkSession tagged
@@ -32,8 +35,7 @@ import java.util.concurrent.{ConcurrentHashMap, Executors}
 final class Server(spark: SparkSession, catalog: Catalog,
     resultRoot: String, port: Int = 0) {
 
-  private val cache = new ConcurrentHashMap[String, String]()
-  private val running = new ConcurrentHashMap[String, Boolean]()
+  private val jobs = new ConcurrentHashMap[String, CompletableFuture[String]]()
   // error bodies carry arbitrary messages: Jackson escapes every control
   // character, so the body stays valid JSON
   private val json = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -47,30 +49,33 @@ final class Server(spark: SparkSession, catalog: Catalog,
       case "POST" =>
         val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
         val jobId = md5(body)
-        // whole-query result cache (odc_backend.py:62-85)
-        Option(cache.get(jobId)) match {
-          case Some(path) => (200, s"""{"output":"$path","cached":true}""")
+        val job = new CompletableFuture[String]()
+        Option(jobs.putIfAbsent(jobId, job)) match {
+          case Some(prior) =>
+            val path = try prior.get()
+              catch { case e: ExecutionException => throw e.getCause }
+            (200, s"""{"output":"$path","cached":true}""")
           case None =>
-            running.put(jobId, true)
             spark.sparkContext.setJobGroup(jobId,
               s"graft job $jobId", interruptOnCancel = true)
             try {
               val compiler = new GraphCompiler(spark, catalog.specs,
                 s"$resultRoot/$jobId")
-              val result = compiler.compile(body)
-              val path = result match {
+              val path = compiler.compile(body) match {
                 case p: String => p // save_result already wrote
                 case c: Cube => Sinks.saveResult(c, "PARQUET",
                   s"$resultRoot/$jobId")
                 case other => Sinks.saveResult(other, "JSON",
                   s"$resultRoot/$jobId")
               }
-              cache.put(jobId, path)
+              job.complete(path)
               (200, s"""{"output":"$path","cached":false}""")
-            } finally {
-              spark.sparkContext.clearJobGroup()
-              running.remove(jobId)
-            }
+            } catch {
+              case t: Throwable =>
+                jobs.remove(jobId, job)
+                job.completeExceptionally(t)
+                throw t
+            } finally spark.sparkContext.clearJobGroup()
         }
     })
     server.createContext("/collections", (ex: HttpExchange) => handle(ex) {
@@ -86,11 +91,14 @@ final class Server(spark: SparkSession, catalog: Catalog,
         val q = Option(ex.getRequestURI.getQuery).getOrElse("")
         val id = q.split('&').map(_.split('=')).collectFirst {
           case Array("id", v) => v }
-        id match {
-          case Some(jobId) if running.containsKey(jobId) =>
+        id.map(jobId => (jobId, Option(jobs.get(jobId)))) match {
+          case Some((jobId, Some(job))) if !job.isDone =>
             spark.sparkContext.cancelJobGroup(jobId)
+            if (job.completeExceptionally(
+                new CancellationException(s"job $jobId was stopped")))
+              jobs.remove(jobId, job)
             (200, s"""{"stopped":"$jobId"}""")
-          case Some(jobId) => (404, s"""{"error":"no running job $jobId"}""")
+          case Some((jobId, _)) => (404, s"""{"error":"no running job $jobId"}""")
           case None => (400, """{"error":"missing id"}""")
         }
     })
@@ -111,7 +119,8 @@ final class Server(spark: SparkSession, catalog: Catalog,
         case e: graft.OpenEoError =>
           (400, json.createObjectNode().put("code", e.code)
             .put("message", e.msg).toString)
-        case e: Exception =>
+        // any other Throwable (a StackOverflowError too) still gets a reply
+        case e: Throwable =>
           (500, json.createObjectNode()
             .put("error", String.valueOf(e.getMessage)).toString)
       }

@@ -32,7 +32,6 @@ final case class CubeMeta(
     yDescending: Boolean = true,
     nodata: Option[Double] = None,
     grid: Option[GridRef] = None) {
-  def bandIndex(label: String): Int = bandOrder.indexOf(label)
   def requireGrid: GridRef = grid.getOrElse(
     throw new IllegalArgumentException(
       "operator requires a regular grid (CubeMeta.grid); set it at scan time"))
@@ -94,15 +93,4 @@ final case class Cube(df: DataFrame, meta: CubeMeta = CubeMeta()) {
 
 object Cube {
   val ValueCol = "value"
-
-  /** Build a cube from any DataFrame by naming its dimension/value columns. */
-  def fromColumns(df: DataFrame, meta: CubeMeta = CubeMeta())(
-      time: Column = null, band: Column = null, y: Column = null,
-      x: Column = null, value: Column): Cube = {
-    val cols = Seq(
-      Option(time).map(_.as(Dim.Time)), Option(band).map(_.as(Dim.Band)),
-      Option(y).map(_.as(Dim.Y)), Option(x).map(_.as(Dim.X)),
-      Some(value.as(ValueCol))).flatten
-    Cube(df.select(cols: _*), meta)
-  }
 }

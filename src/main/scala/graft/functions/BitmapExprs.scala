@@ -565,12 +565,6 @@ object BitmapExprs {
     call_function("graft_bitmap_or", a, b)
   }
 
-  /** Membership probe. */
-  def bitmapContains(sketch: Column, value: Column): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_bitmap_contains", sketch, value)
-  }
-
   /** Intersection (retention). */
   def bitmapAnd(a: Column, b: Column): Column = {
     graft.GraftExtensions.registerActive()

@@ -4,12 +4,14 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{
-  BinaryExpression, Expression, ExpressionInfo, GenericInternalRow, Literal}
+  BinaryExpression, Expression, ExpressionInfo, GenericInternalRow, Literal,
+  UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions.{call_function, lit, struct}
 import org.apache.spark.sql.types._
 
-/** Per-row coordinate reprojection as a native Catalyst expression.
+/** Native per-row geometry expressions: coordinate reprojection and the
+  * point-in-polygon kernel.
   *
   * The reference reprojects whole cubes through GDAL/pyproj at load time
   * (load_odc_collection.py:128-173, openeo_odc_driver.py:175-202). Here
@@ -17,7 +19,8 @@ import org.apache.spark.sql.types._
   * executor projection — pure JVM math, both CRS definitions resolved
   * once per expression instance, no Python/GDAL boundary — and the regrid
   * that follows is the usual groupBy bin. Used by the resample_spatial
-  * projection fold. */
+  * projection fold. The point-in-polygon kernel is [[graft.ops.Geo]]'s;
+  * [[PointInPolygons]] only carries it into the plan. */
 object GeoExprs {
 
   case class ReprojectPoint(left: Expression, right: Expression,
@@ -50,6 +53,33 @@ object GeoExprs {
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
+  }
+
+  /** Ids of the [[graft.ops.Geo.Polygons]] rings containing (x, y), in
+    * ring order. The rings are an argument, not children: generated code
+    * calls this instance through a plan reference, whatever their size. */
+  case class PointInPolygons(left: Expression, right: Expression,
+      polygons: graft.ops.Geo.Polygons)
+      extends BinaryExpression with RefCodegen2 {
+    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+    override def prettyName: String = "graft_point_in_polygons"
+    // built only by `containing`, which casts both inputs to double
+    override def nullSafeEval(xv: Any, yv: Any): Any =
+      UnsafeArrayData.fromPrimitiveArray(polygons.containing(
+        xv.asInstanceOf[Double], yv.asInstanceOf[Double]))
+
+    override protected def withNewChildrenInternal(
+        newLeft: Expression, newRight: Expression): Expression =
+      copy(left = newLeft, right = newRight)
+  }
+
+  /** [[PointInPolygons]] as a Column (null when x or y is null); no SQL
+    * function name is registered for it. */
+  def containing(x: Column, y: Column,
+      polygons: graft.ops.Geo.Polygons): Column = {
+    import org.apache.spark.sql.graft.Bridge
+    Bridge.column(PointInPolygons(Bridge.expression(x.cast("double")),
+      Bridge.expression(y.cast("double")), polygons))
   }
 
   private def intLit(e: Expression, what: String): Int = e match {

@@ -1036,17 +1036,6 @@ object TextHashExprs {
           intLit(cs(2), "graft_cms_buckets w"))))
   }
 
-  def simhash64(tokens: Column): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_simhash64", tokens)
-  }
-
-  def minhashSig(shingles: Column, k: Int): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_minhash_sig", shingles,
-      org.apache.spark.sql.functions.lit(k))
-  }
-
   /** One-pass text→MinHash signature (caller lowers/trims the text). */
   def minhashText(text: Column, n: Int, k: Int): Column = {
     graft.GraftExtensions.registerActive()

@@ -85,8 +85,9 @@ object Filters {
     crs.toUpperCase.stripPrefix("EPSG:").toIntOption
 
   /** `filter_spatial` — clip to polygon(s): reproject vertices driver-side,
-    * then a codegen point-in-polygon predicate (openeo_odc_driver.py:686-707
-    * rasterizes instead). Rows outside are dropped (semi-join semantics). */
+    * then the point-in-polygon kernel ([[Geo.pointInPolygons]];
+    * openeo_odc_driver.py:686-707 rasterizes instead). Rows outside are
+    * dropped (semi-join semantics). */
   def filterSpatial(c: Cube, rings: Seq[Geo.Ring], ringsEpsg: Int = 4326): Cube =
     filterSpatialRef(c, rings, EpsgRef(ringsEpsg))
 

@@ -1,96 +1,105 @@
 package graft.ops
 
-import org.apache.spark.sql.Column
+import graft.functions.GeoExprs
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.functions._
 
 /** Geometry primitives used by the spatial operators.
   *
-  * Point-in-polygon is compiled to a pure `Column` expression (even-odd ray
-  * casting unrolled over the polygon's edges) so it stays inside
-  * whole-stage codegen — no UDF, no driver round-trip. The geometry is
-  * always small (query literals), the cube is the 100 TB side; unrolling the
-  * edges into the expression tree is the broadcast-free way to filter.
-  * Reference behavior: rasterize-polygon-then-mask
-  * (load_odc_collection.py:190-226, openeo_odc_driver.py:641-652).
+  * Point-in-polygon has one implementation: the rings become data
+  * ([[Geo.Polygons]], built once on the driver) that one native expression
+  * ([[graft.functions.GeoExprs.PointInPolygons]]) reads per row, so the
+  * plan and generated code do not grow with the vertex count — as in the
+  * reference, which rasterizes each polygon once and masks the cube
+  * (load_odc_collection.py:190-226, openeo_odc_driver.py:641-684).
+  * `filter_spatial`, `aggregate_spatial` and [[spatialJoin]] wrap it.
   */
 object Geo {
 
   /** Closed ring as (x, y) vertex list (first vertex need not be repeated). */
   type Ring = Seq[(Double, Double)]
 
-  /** Even-odd rule point-in-polygon as a codegen-friendly expression:
-    * count edge crossings of the rightward ray from (px, py); odd = inside.
-    */
-  def pointInRing(px: Column, py: Column, ring: Ring): Column = {
-    val n = ring.length
-    val crossings: Seq[Column] = (0 until n).map { i =>
-      val (x1, y1) = ring(i)
-      val (x2, y2) = ring((i + 1) % n)
-      if (y1 == y2) lit(0) // horizontal edge never crosses the ray
-      else {
-        val straddles = (lit(y1) > py) =!= (lit(y2) > py)
-        val xAtY = lit(x1) + (py - lit(y1)) * lit((x2 - x1) / (y2 - y1))
-        when(straddles && px < xAtY, 1).otherwise(0)
+  /** Rings as data: each ring's non-horizontal edges as a stride-4 flat
+    * array of (x1, y1, y2, slope), `slope = (x2 - x1) / (y2 - y1)`, ring
+    * r's at edges `start(r) until start(r + 1)`, plus its y range.
+    * `ids(r)` is what [[containing]] reports for ring r.
+    *
+    * The even-odd crossing test is `(y1 > py) != (y2 > py) &&
+    * px < x1 + (py - y1) * slope`, an odd count meaning inside, with every
+    * comparison in Spark's double ordering (NaN above every number), so
+    * it agrees with the same predicate written as Catalyst comparisons.
+    * The y-range skip is exact: an edge straddles `py` only if
+    * `min(y1, y2) <= py < max(y1, y2)`. (An x-range skip would not be:
+    * `x1 + (py - y1) * slope` can round past the ring's largest x.) */
+  final class Polygons private (ids: Array[Int], start: Array[Int],
+      yRange: Array[Double], edge: Array[Double]) extends Serializable {
+
+    /** Ids of every ring containing (px, py), in ring order. */
+    def containing(px: Double, py: Double): Array[Int] = {
+      val hit = new Array[Int](ids.length)
+      var n = 0
+      var r = 0
+      while (r < ids.length) {
+        var odd = false
+        if (compareDoubles(yRange(2 * r), py) <= 0 && compareDoubles(yRange(2 * r + 1), py) > 0) {
+          var e = 4 * start(r)
+          while (e < 4 * start(r + 1)) {
+            if ((compareDoubles(edge(e + 1), py) > 0) != (compareDoubles(edge(e + 2), py) > 0) &&
+                compareDoubles(px, edge(e) + (py - edge(e + 1)) * edge(e + 3)) < 0) odd = !odd
+            e += 4
+          }
+        }
+        if (odd) { hit(n) = ids(r); n += 1 }
+        r += 1
       }
+      java.util.Arrays.copyOf(hit, n)
     }
-    (crossings.reduce(_ + _) % 2) === 1
+
+    override def toString: String =
+      s"Polygons(${ids.length} rings, ${edge.length / 4} edges)"
   }
+
+  object Polygons {
+    def apply(ids: Seq[Int], rings: Seq[Ring]): Polygons = {
+      require(ids.length == rings.length, "one id per ring")
+      val edges = rings.map(ring => ring.indices.flatMap { i =>
+        val ((x1, y1), (x2, y2)) = (ring(i), ring((i + 1) % ring.length))
+        // a horizontal edge never crosses the ray
+        if (y1 == y2) None else Some(Seq(x1, y1, y2, (x2 - x1) / (y2 - y1)))
+      })
+      val ys = edges.map(_.flatMap(_.slice(1, 3)).sortWith(compareDoubles(_, _) < 0))
+      new Polygons(ids.toArray, edges.scanLeft(0)(_ + _.length).toArray,
+        // an edgeless ring gets the empty range [0, 0): nothing is inside
+        ys.flatMap(y => if (y.isEmpty) Seq(0.0, 0.0) else Seq(y.head, y.last)).toArray,
+        edges.flatten.flatten.toArray)
+    }
+  }
+
+  /** Even-odd rule point-in-ring; a null coordinate is outside. */
+  def pointInRing(px: Column, py: Column, ring: Ring): Column =
+    pointInPolygons(px, py, Seq(ring))
 
   /** Point in any ring of a multi-polygon (no hole support — the reference's
     * rasterize path has none either). */
   def pointInPolygons(px: Column, py: Column, rings: Seq[Ring]): Column =
-    rings.map(pointInRing(px, py, _)).reduce(_ || _)
+    coalesce(size(GeoExprs.containing(px, py, Polygons(rings.indices, rings))) > 0, lit(false))
 
   /** Feature-id assignment: first polygon containing the point, else null.
     * Mirrors the per-feature clip loop of aggregate_spatial
     * (openeo_odc_driver.py:662-684) as one expression. */
   def featureId(px: Column, py: Column, features: Seq[Ring]): Column =
-    features.zipWithIndex.foldRight(lit(null).cast("int")) {
-      case ((ring, i), acc) => when(pointInRing(px, py, ring), lit(i)).otherwise(acc)
-    }
+    get(GeoExprs.containing(px, py, Polygons(features.indices, features)), lit(0))
 
   def bboxOf(ring: Ring): (Double, Double, Double, Double) =
     (ring.map(_._1).min, ring.map(_._2).min, ring.map(_._1).max, ring.map(_._2).max)
 
-  /** Point-in-polygon JOIN against a polygon SET — the 2-D analog of
-    * [[graft.ops.TableJoins.rangeJoin]]'s binning trick: every polygon
-    * registers the grid cells its bbox covers (driver-side — the
-    * polygon set is compile-time literal, like every spatial filter in
-    * this engine), points map to their one cell, a BROADCAST equi-join
-    * on the cell proposes candidates, and the exact unrolled ray-cast
-    * ([[pointInRing]], whole-stage codegen) decides. Each (point,
-    * polygon) pair meets in exactly one cell — the point's — so no
-    * dedup. Output: point rows + `poly_id`, one row per containing
-    * polygon. Choose `cellSize` near the typical polygon diameter:
-    * candidate factor stays O(1). */
-  def spatialJoin(points: org.apache.spark.sql.DataFrame,
-      px: Column, py: Column, polys: Seq[(Int, Ring)],
-      cellSize: Double): org.apache.spark.sql.DataFrame = {
-    require(polys.nonEmpty, "spatialJoin needs at least one polygon")
-    require(cellSize > 0, "cellSize must be positive")
-    val spark = points.sparkSession
-    import spark.implicits._
-    val cells = polys.flatMap { case (pid, ring) =>
-      val (x0, y0, x1, y1) = bboxOf(ring)
-      for {
-        cx <- math.floor(x0 / cellSize).toLong to
-          math.floor(x1 / cellSize).toLong
-        cy <- math.floor(y0 / cellSize).toLong to
-          math.floor(y1 / cellSize).toLong
-      } yield (cx, cy, pid)
-    }
-    val cellDf = org.apache.spark.sql.functions.broadcast(
-      cells.toDF("_cx", "_cy", "poly_id"))
-    val exact = polys.map { case (pid, ring) =>
-      col("poly_id") === lit(pid) && pointInRing(px, py, ring)
-    }.reduce(_ || _)
-    points
-      .withColumn("_cx", floor(px / lit(cellSize)).cast("long"))
-      .withColumn("_cy", floor(py / lit(cellSize)).cast("long"))
-      .join(cellDf, Seq("_cx", "_cy"))
-      .where(exact)
-      .drop("_cx", "_cy")
-  }
+  /** Point-in-polygon JOIN against a polygon SET: point rows + `poly_id`,
+    * one row per containing polygon (none for a point in no polygon). */
+  def spatialJoin(points: DataFrame, px: Column, py: Column,
+      polys: Seq[(Int, Ring)]): DataFrame =
+    points.withColumn("poly_id", explode(GeoExprs.containing(px, py,
+      Polygons(polys.map(_._1), polys.map(_._2)))))
 }
 
 /** CRS dispatch for driver-side vertex transforms and the per-row

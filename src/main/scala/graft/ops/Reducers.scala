@@ -162,10 +162,11 @@ object Reducers {
 
   /** `aggregate_spatial` — zonal statistics over GeoJSON features
     * (openeo_odc_driver.py:628-684). The reference loops features and
-    * concats; here feature assignment is one codegen expression and the
-    * whole thing is a single aggregation — per-feature parallelism instead
-    * of a driver loop. Output dims: (time?, band?, feature id as `x`...
-    * no — feature ordinal exposed as column `result`). */
+    * concats; here each pixel gets the ordinal of the first feature
+    * containing it ([[Geo.featureId]], one kernel call whatever the vertex
+    * count) and the whole thing is a single aggregation — per-feature
+    * parallelism instead of a driver loop. Output dims: the cube's dims
+    * other than x/y, plus the feature ordinal as `targetDimension`. */
   def aggregateSpatial(c: Cube, features: Seq[Geo.Ring], name: String,
       featuresEpsg: Int = 4326, targetDimension: String = "result"): DataFrame = {
     val cubeEpsg = c.meta.crs.flatMap(Filters.crsEpsg).getOrElse(featuresEpsg)

@@ -76,11 +76,6 @@ object Sar2Cube {
     (x, if (north) y else y + lit(10000000.0))
   }
 
-  /** S2-grid alignment (sar2cube/utils.py:18-54): snap an extent outward to
-    * multiples of the resolution. */
-  def alignToGrid(v: Double, res: Double, up: Boolean): Double =
-    if (up) math.ceil(v / res) * res else math.floor(v / res) * res
-
   /** `geocode`: cube carries grid_lon/grid_lat as bands; data bands are
     * regridded to a regular UTM grid of `resolution` meters. Output grid
     * is S2-aligned like create_S2grid (sar2cube/utils.py:56-82). Nearest

@@ -179,17 +179,6 @@ object StreamingOps {
       .drop("_sess")
   }
 
-  /** Streaming quality-gate filter: pure per-row expressions pass through
-    * unchanged in streaming mode (no state) — language ID + quality score
-    * as one select. */
-  def qualityGateStream(df: DataFrame, textCol: String,
-      minQuality: Double): DataFrame = {
-    import graft.text.TextAnalysis
-    df.withColumn("quality", TextAnalysis.qualityScore(col(textCol)))
-      .withColumn("lang_pred", TextAnalysis.langId(col(textCol)))
-      .where(col("quality") >= minQuality)
-  }
-
   /** One streaming near-dup match: `id_a < id_b`, Hamming distance of the
     * two 64-bit simhashes. A pair can surface from several buckets —
     * consumers `dropDuplicates("id_a","id_b")` per sink batch. */

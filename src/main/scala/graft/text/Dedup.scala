@@ -24,12 +24,6 @@ object Dedup {
     df.groupBy(sha2(col(textCol), 256).as("content_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** MinHash signature: k-lane minima over the shingle array — native
-    * one-pass expression (one xxhash64 per shingle + k affine
-    * permutations; see graft.functions.TextHashExprs.MinHashSig). */
-  def minhashSignature(sh: Column, k: Int): Column =
-    graft.functions.TextHashExprs.minhashSig(sh, k)
-
   /** LSH band key rows: (band_id, band_hash) pairs for blocking. k must be
     * divisible into `bands` of r = k/bands rows. */
   def lshBands(sig: Column, k: Int, bands: Int): Column = {

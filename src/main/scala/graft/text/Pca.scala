@@ -47,10 +47,6 @@ object Pca {
   private def qround(x: Double): Long =
     if (x >= 0) math.round(x) else -math.round(-x)
 
-  /** Upper-triangle flat index of (i, j), i <= j < dim. */
-  private def triIdx(i: Int, j: Int, dim: Int): Int =
-    i * dim - i * (i - 1) / 2 + (j - i)
-
   private final class GramAgg(dim: Int)
       extends Aggregator[Seq[Float], Array[Long], Seq[Long]] {
     private val n = dim * (dim + 1) / 2

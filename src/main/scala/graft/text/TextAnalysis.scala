@@ -20,13 +20,6 @@ object TextAnalysis {
     "fr" -> Seq(" le ", " les ", " avec ", " dans "),
     "zh" -> Seq(" de5 ", " he2 ", " shi4 ", " zai4 "))
 
-  /** Count non-overlapping occurrences of `needle` via length difference —
-    * replicable in any SQL dialect (the DuckDB oracle uses the same
-    * formula). */
-  def countOccurrences(text: Column, needle: String): Column =
-    ((length(text) - length(replace(text, lit(needle), lit("")))) /
-      needle.length).cast("int")
-
   /** Language-ID: argmax of marker-token counts; null if no marker hits. */
   def langId(text: Column): Column = {
     val padded = concat(lit(" "), text, lit(" "))

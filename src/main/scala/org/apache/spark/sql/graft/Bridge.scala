@@ -25,6 +25,12 @@ object Bridge {
       : org.apache.spark.sql.Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
 
+  /** The inverse of [[column]]: a native expression can take Column
+    * inputs without registering a SQL function name. */
+  def expression(c: org.apache.spark.sql.Column)
+      : org.apache.spark.sql.catalyst.expressions.Expression =
+    org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+
   /** A DataFrame's analyzed logical plan — needed by table-valued
     * function builders, which must return a [[LogicalPlan]] for the
     * relation a DataFrame already describes. */

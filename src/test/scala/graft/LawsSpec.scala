@@ -1,7 +1,8 @@
 package graft
 
 import graft.cube.{Cube, Dim}
-import graft.ops.{Crs, Filters, Joins}
+import graft.ops.{Crs, Filters, Geo, Joins}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, rng}
 
@@ -658,5 +659,109 @@ class LawsSpec extends SparkSpec {
       // partial sources only — the allocation itself is exact)
       out.length.toDouble shouldBe 180.0 +- 54.0
     }
+  }
+
+  /** The unrolled ray-casting `Column` tree that [[Geo.Polygons]]
+    * replaced, kept as the kernel's reference: one `when` term per
+    * non-horizontal edge. */
+  private object UnrolledRayCast {
+    def pointInRing(px: Column, py: Column, ring: Geo.Ring): Column = {
+      val n = ring.length
+      val crossings: Seq[Column] = (0 until n).map { i =>
+        val (x1, y1) = ring(i)
+        val (x2, y2) = ring((i + 1) % n)
+        if (y1 == y2) lit(0)
+        else {
+          val straddles = (lit(y1) > py) =!= (lit(y2) > py)
+          val xAtY = lit(x1) + (py - lit(y1)) * lit((x2 - x1) / (y2 - y1))
+          when(straddles && px < xAtY, 1).otherwise(0)
+        }
+      }
+      (crossings.reduce(_ + _) % 2) === 1
+    }
+    def pointInPolygons(px: Column, py: Column, rings: Seq[Geo.Ring]): Column =
+      rings.map(pointInRing(px, py, _)).reduce(_ || _)
+    def featureId(px: Column, py: Column, features: Seq[Geo.Ring]): Column =
+      features.zipWithIndex.foldRight(lit(null).cast("int")) {
+        case ((ring, i), acc) => when(pointInRing(px, py, ring), lit(i)).otherwise(acc)
+      }
+  }
+
+  test("law: the point-in-polygon kernel equals the unrolled ray-cast " +
+      "tree for filter, first id and join rows, codegen and interpreted") {
+    val rnd = new scala.util.Random(5)
+    // 3-64 vertices; a third of the coordinates on a 0.5 lattice, so
+    // horizontal edges, shared vertex heights and collinear runs occur
+    def coord(): Double =
+      if (rnd.nextInt(3) == 0) (rnd.nextInt(41) - 20) * 0.5 else rnd.nextDouble() * 20 - 10
+    val rings: Seq[Geo.Ring] = (0 until 24).map { _ =>
+      val n = 3 + rnd.nextInt(62)
+      val vs = Array.fill(n)((coord(), coord()))
+      for (i <- 1 until n if rnd.nextInt(8) == 0) vs(i) = (vs(i)._1, vs(i - 1)._2)
+      vs.toSeq
+    }
+    val edges = rings.flatMap(r => r.indices.map(i => (r(i), r((i + 1) % r.length))))
+    val specials = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+      0.0, -0.0, 1e308, -1e308, Double.MinPositiveValue).map(Option(_)) :+ None
+    def any(): Double = rnd.nextDouble() * 22 - 11
+    val pts: Seq[(Option[Double], Option[Double])] =
+      Seq.fill(92000)((Some(any()), Some(any()))) ++
+      rings.flatten.map { case (x, y) => (Some(x), Some(y)) } ++ // exact vertices
+      edges.flatMap { case ((x1, y1), (x2, y2)) =>
+        // on the edge: its own crossing abscissa, and interpolated points
+        val py = y1 + rnd.nextDouble() * (y2 - y1)
+        val onX = if (y1 == y2) x1 else x1 + (py - y1) * ((x2 - x1) / (y2 - y1))
+        (Some(onX), Some(py)) +:
+          Seq(0.25, 0.5, 0.75).map(s => (Some(x1 + s * (x2 - x1)), Some(y1 + s * (y2 - y1))))
+      } ++
+      rings.flatten.map { case (_, y) => (Some(any()), Some(y)) } ++ // vertex heights
+      (for (a <- specials; b <- specials) yield (a, b)) ++
+      Seq.fill(4000) {
+        val s = specials(rnd.nextInt(specials.size))
+        if (rnd.nextBoolean()) (s, Some(any())) else (Some(any()), s)
+      }
+    pts.size should be >= 100000
+    val df = spark.sparkContext.parallelize(
+      pts.zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }, 4)
+      .toDF("id", "x", "y").cache()
+    df.count()
+    val (x, y) = (col("x"), col("y"))
+    val groups = rings.grouped(4).toSeq
+    val mismatches = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
+    for ((mode, wholeStage) <- Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false")) {
+      val saved = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+        .map(k => k -> spark.conf.getOption(k))
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try groups.zipWithIndex.foreach { case (group, g) =>
+        def diff(a: String, b: String) = sum(when(!(col(a) <=> col(b)), 1L).otherwise(0L))
+        val r = df.select(
+            Geo.pointInPolygons(x, y, group).as("k_in"),
+            UnrolledRayCast.pointInPolygons(x, y, group).as("r_in"),
+            Geo.featureId(x, y, group).as("k_fid"),
+            UnrolledRayCast.featureId(x, y, group).as("r_fid"))
+          .agg(diff("k_in", "r_in"), diff("k_fid", "r_fid")).head()
+        mismatches(s"$mode filter") += r.getLong(0)
+        mismatches(s"$mode first id") += r.getLong(1)
+        val polys = group.zipWithIndex.map { case (ring, i) => (100 + 4 * g + i, ring) }
+        val kernelRows = Geo.spatialJoin(df, x, y, polys).select("id", "poly_id")
+          .as[(Long, Int)].collect().toSeq.sorted
+        val treeRows = polys.map { case (pid, ring) =>
+          df.where(UnrolledRayCast.pointInRing(x, y, ring))
+            .select(col("id"), lit(pid).as("poly_id"))
+        }.reduce(_ union _).as[(Long, Int)].collect().toSeq.sorted
+        kernelRows.size should be > 0
+        mismatches(s"$mode join rows") +=
+          (kernelRows diff treeRows).size + (treeRows diff kernelRows).size
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    df.unpersist()
+    info(s"${pts.size} points, ${rings.size} rings (${edges.size} edges), " +
+      s"mismatches: ${mismatches.toSeq.sorted.mkString(", ")}")
+    mismatches.size shouldBe 6
+    mismatches.values.sum shouldBe 0L
   }
 }

@@ -122,4 +122,47 @@ class ReducersSpec extends SparkSpec {
     rowSet(r.select("result", Cube.ValueCol)) shouldBe
       Set(Seq(0, 1.5), Seq(1, 8.0))
   }
+
+  /** A star-shaped ring of `v` vertices around (64, 64), within a
+    * 128 × 128 pixel grid. */
+  private def star(v: Int): Seq[(Double, Double)] = {
+    val rnd = new scala.util.Random(v)
+    (0 until v).map { i =>
+      val a = 2 * math.Pi * i / v
+      val r = 40 + 15 * math.sin(7 * a) + rnd.nextDouble() * 4
+      (64.3 + r * math.cos(a), 63.7 + r * math.sin(a))
+    }
+  }
+
+  test("aggregate_spatial over a 4,096-vertex polygon equals a plain " +
+      "even-odd reference; the plan does not grow with vertex count") {
+    val pixels = for (y <- 0 until 128; x <- 0 until 128)
+      yield ("2024-01-01", "B", y.toDouble, x.toDouble, ((x * 7 + y * 13) % 100).toDouble)
+    val c = cubeOf(pixels: _*)
+    val features = Seq(star(4096), Seq((20.0, 20.0), (110.0, 30.0), (60.0, 100.0)))
+    def inside(ring: Seq[(Double, Double)], px: Double, py: Double): Boolean = {
+      var odd = false
+      for (i <- ring.indices) {
+        val (x1, y1) = ring(i); val (x2, y2) = ring((i + 1) % ring.length)
+        if (y1 != y2 && ((y1 > py) != (y2 > py)) &&
+            px < x1 + (py - y1) * ((x2 - x1) / (y2 - y1))) odd = !odd
+      }
+      odd
+    }
+    val expected = pixels.flatMap { case (_, _, y, x, v) =>
+      features.indexWhere(inside(_, x, y)) match {
+        case -1 => None
+        case f => Some(f -> v)
+      }
+    }.groupBy(_._1).map { case (f, vs) => Seq(f, vs.map(_._2).sum / vs.size) }.toSet
+    expected.size shouldBe 2
+    rowSet(Reducers.aggregateSpatial(c, features, "mean")
+      .select("result", Cube.ValueCol)) shouldBe expected
+
+    def planSize(v: Int): Int =
+      Reducers.aggregateSpatial(c, Seq(star(v)), "mean").queryExecution
+        .optimizedPlan.collect { case p => p.expressions.map(_.collect { case e => e }.size).sum }
+        .sum
+    planSize(512) shouldBe planSize(8)
+  }
 }

@@ -220,4 +220,60 @@ class ServerSpec extends SparkSpec {
     val (code, _) = http("DELETE", "/stop_job?id=deadbeef")
     code shouldBe 404
   }
+
+  test("two concurrent identical NetCDF POSTs run the graph once and " +
+      "reply with one output path") {
+    def graph(pad: String) = s"""{
+      "load": {"process_id": "load_collection", "arguments": {"id": "c1"}},
+      "save": {"process_id": "save_result", "arguments": {
+        "data": {"from_node": "load"}, "format": "NETCDF"}, "result": true}}$pad"""
+    def md5(s: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    // the job count of a group once the status store has caught up
+    def jobsOf(group: String): Int = {
+      var (n, last) = (-1, -2)
+      while (n != last) {
+        last = n; Thread.sleep(500)
+        n = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+      }
+      n
+    }
+    // the same graph under another md5 (trailing blank), run alone
+    val (soloCode, _) = http("POST", "/graph", graph(" "))
+    soloCode shouldBe 200
+    val solo = jobsOf(md5(graph(" ")))
+    solo should be > 0
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val replies = (0 until 2).map { _ =>
+      val f = new java.util.concurrent.CompletableFuture[(Int, String)]()
+      new Thread(() => {
+        start.await()
+        f.complete(http("POST", "/graph", graph("")))
+      }).start()
+      f
+    }
+    start.countDown()
+    val got = replies.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+    got.map(_._1) shouldBe Seq(200, 200)
+    got.map(_._2.split("\"output\":\"")(1).split("\"")(0)).distinct.size shouldBe 1
+    got.count(_._2.contains(""""cached":false""")) shouldBe 1
+    jobsOf(md5(graph(""))) shouldBe solo
+  }
+
+  test("a graph that overflows the stack still gets a reply") {
+    // a 100,000-node linear from_node chain: the graph's recursive
+    // topological sort overflows the request thread's stack
+    val n = 100000
+    val graph = (1 until n).map(i =>
+      s""""n$i":{"process_id":"absolute","arguments":{"x":{"from_node":"n${i - 1}"}}""" +
+        (if (i == n - 1) ""","result":true}""" else "}"))
+      .mkString("""{"n0":{"process_id":"load_collection","arguments":{"id":"c1"}},""", ",", "}")
+    val res = HttpClient.newHttpClient().send(
+      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${server.boundPort}/graph"))
+        .timeout(java.time.Duration.ofSeconds(30))
+        .POST(HttpRequest.BodyPublishers.ofString(graph)).build(),
+      HttpResponse.BodyHandlers.ofString())
+    res.statusCode() shouldBe 500
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(res.body()).has("error") shouldBe true
+  }
 }

@@ -280,7 +280,7 @@ class TableJoinsSpec extends SparkSpec {
     out(4L)._4 shouldBe None // equal ts is not strictly after
   }
 
-  test("spatialJoin == unbinned point-in-polygon filter, across cell sizes") {
+  test("spatialJoin == unbinned point-in-polygon filter, exactly once") {
     import graft.ops.Geo
     val rnd = new scala.util.Random(23)
     val pts = (1 to 1000).map(i =>
@@ -293,12 +293,10 @@ class TableJoinsSpec extends SparkSpec {
       pts.where(Geo.pointInRing(col("px"), col("py"), ring))
         .select("id").as[Long].collect().map(_ -> pid)
     }.toSet
-    for (cell <- Seq(1.0, 4.0, 25.0)) {
-      val got = Geo.spatialJoin(pts, col("px"), col("py"), polys, cell)
-        .select("id", "poly_id").as[(Long, Int)].collect()
-      got.length shouldBe got.toSet.size // exactly-once
-      got.toSet shouldBe naive
-    }
+    val got = Geo.spatialJoin(pts, col("px"), col("py"), polys)
+      .select("id", "poly_id").as[(Long, Int)].collect()
+    got.length shouldBe got.toSet.size // exactly-once
+    got.toSet shouldBe naive
   }
 
   test("saltedJoin is row-identical to the plain join (inner and left) on skewed data") {
