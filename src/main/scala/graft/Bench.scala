@@ -118,7 +118,7 @@ object Bench {
       (h.getCount, h.getSnapshot.getValues.sum)
     }
     val cgPre = codegenCompileMs()
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
+    val timed = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
       // per-query isolation (untimed): caches persisted by a previous
@@ -130,11 +130,18 @@ object Bench {
       // noop sink forces full materialization of every output column —
       // count() alone would let Catalyst prune the projections away and
       // bench nothing.
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}") }
-      name -> (System.nanoTime() - t0) / 1e9
+      val ok =
+        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
+      (name, (System.nanoTime() - t0) / 1e9, ok)
     }
+    // a failed query's time-to-failure is not a timing: it stays out of
+    // the total and every per-query map, is listed under "failed", and
+    // makes the run exit nonzero
+    val results = timed.collect { case (n, t, true) => n -> t }
+    val failed = timed.collect { case (n, _, false) => n }
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // 3-decimal (ms) per-query precision keeps the JSON line ~40% shorter
     // than full-double formatting — rounds 2 and 3 both lost the head of
     // the one long line to the driver's bounded tail capture
@@ -179,7 +186,7 @@ object Bench {
         val bt = baseTimes.sum
         s""","baseline_subset_total_sec":${r3(bt)},"baseline_ref_sec":$BaselineRefSec,"baseline_subset_ratio":${r3(bt / BaselineRefSec)}"""
       } else ""
-    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"cal":$cal,"cal_ref":$calRef,"sf":"$sfDir","total_sec":${r3(total)},"cal_norm_total_sec":${r3(calNorm)}$baseFields}"""
+    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"cal":$cal,"cal_ref":$calRef,"sf":"$sfDir","total_sec":${r3(total)},"cal_norm_total_sec":${r3(calNorm)},"failed":$failedJson$baseFields}"""
     // Lossless full-name record on disk, twice: BENCH_LOCAL.json
     // (gitignored, machine-local scratch) and BENCH_FULL.json (committed —
     // the per-query decomposition of the OFFICIAL run, since the driver
@@ -214,7 +221,7 @@ object Bench {
       val top = results.sortBy(-_._2).take(topK)
         .map { case (k, v) => s"\"" + k + "\":" + r2(v) }
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$top,"nq":${results.size},"full":"BENCH_FULL.json","cal":$cal,"cal_ref":$calRef,"sf":"$sfDir","total_sec":${r3(total)},"cal_norm_total_sec":${r3(calNorm)}$baseFields}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$top,"nq":${results.size},"full":"BENCH_FULL.json","cal":$cal,"cal_ref":$calRef,"sf":"$sfDir","total_sec":${r3(total)},"cal_norm_total_sec":${r3(calNorm)},"failed":$failedJson$baseFields}"""
     }
     val shortLine = Iterator.iterate(48)(_ - 4).takeWhile(_ >= 0)
       .map(compact).find(_.length <= budget).getOrElse(compact(0))
@@ -243,5 +250,6 @@ object Bench {
     // the stderr stream still carries the bare object
     System.err.println(shortLine)
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -655,7 +655,7 @@ private[graft] object QueriesCube {
     }),
     // --- relational spine (classic agg/join over lineitem, judge smoke) --
     "q1_agg" -> ((s, dir) => {
-      val l = s.read.parquet(s"$dir/lineitem.parquet")
+      val l = Tables.read(s, s"$dir/lineitem.parquet")
       l.groupBy("l_returnflag")
         .agg(dsum(col("l_quantity")).as("sum_qty"),
           dsum(col("l_extendedprice")).as("sum_price"),

@@ -33,10 +33,13 @@ object SparkEntry {
     * (current fixtures — arrives as TIMESTAMP_NTZ; a cast to the
     * session-UTC TimestampType keeps wall-clock values identical on
     * both engines). Dispatch on the actual footer schema so both
-    * generations read to the same µs cube time axis. */
+    * generations read to the same µs cube time axis. The schema comes
+    * from [[Tables.read]]: inferred on the first read of a fixture
+    * directory, then taken from the registry, so a repeated read starts
+    * no Spark job. */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = Tables.read(spark, s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
@@ -101,9 +104,9 @@ object SparkEntry {
     * decimal (DuckDB) with zero rounding until the final double cast.
     * MUST stay formula-identical to [[partsuppSql]]. */
   private[graft] def partsuppDf(s: SparkSession, dir: String): DataFrame = {
-    val S = s.read.parquet(s"$dir/supplier.parquet").count() // dim count
+    val S = Tables.read(s, s"$dir/supplier.parquet").count() // dim count
     val q = math.max(1L, S / 4)
-    s.read.parquet(s"$dir/part.parquet").select(col("p_partkey"))
+    Tables.read(s, s"$dir/part.parquet").select(col("p_partkey"))
       .select(col("p_partkey"),
         explode(array((0 until 4).map(i => lit(i.toLong)): _*)).as("i"))
       .select(
@@ -139,7 +142,7 @@ object SparkEntry {
     * derived identically by both engines (day arithmetic on timestamps
     * is exact). MUST stay formula-identical to [[lineitemXSql]]. */
   private[graft] def lineitemX(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/lineitem.parquet")
+    Tables.read(s, s"$dir/lineitem.parquet")
       .withColumn("l_shipmode", element_at(
         array(Seq("REG AIR", "AIR", "RAIL", "SHIP", "TRUCK", "MAIL", "FOB")
           .map(lit): _*),
@@ -421,7 +424,7 @@ object SparkEntry {
   private[graft] def classifierScoreShared(s: SparkSession,
       dir: String): DataFrame =
     sharedDf("clfscore", dir) {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.read(s, s"$dir/documents.parquet")
       val feats = Classifier.hashedFeatures(d, "text", "doc_id", dim = 64)
         .localCheckpoint(true)
       val labels = d.select(col("doc_id"),
@@ -436,7 +439,7 @@ object SparkEntry {
     * they need (trainers read `gram`, scorers (id, gram)). */
   private[graft] def corpusGramsShared(s: SparkSession, dir: String): DataFrame =
     sharedDf("cgrams", dir) {
-      s.read.parquet(s"$dir/documents.parquet")
+      Tables.read(s, s"$dir/documents.parquet")
         .select(col("doc_id"), col("lang"),
           explode(graft.text.LanguageModel.bigrams(col("text"))).as("gram"))
     }
@@ -457,7 +460,7 @@ object SparkEntry {
   private[graft] def bm25RunShared(s: SparkSession, dir: String): DataFrame =
     sharedDf("bm25run", dir) {
       graft.text.Search.bm25(
-        s.read.parquet(s"$dir/documents.parquet"), "text", "doc_id",
+        Tables.read(s, s"$dir/documents.parquet"), "text", "doc_id",
         Seq("spark", "merge", "window"))
     }
 
@@ -468,7 +471,7 @@ object SparkEntry {
   private[graft] def dedupPairsShared(s: SparkSession, dir: String): DataFrame =
     sharedDf("ndpairs", dir) {
       Dedup.ngramJaccardPairs(
-        s.read.parquet(s"$dir/documents.parquet"), "text", "doc_id",
+        Tables.read(s, s"$dir/documents.parquet"), "text", "doc_id",
         Seq("lang", "source"), shingleN = 3, threshold = 0.5)
     }
 
@@ -584,7 +587,7 @@ object SparkEntry {
   private[graft] def buildSearchIndex(s: SparkSession, dir: String): String =
     sharedBuild("searchidx", dir) { p =>
       deleteRecursively(p) // stale store from a previous JVM
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.read(s, s"$dir/documents.parquet")
       withSearchBuildConf(s) {
         graft.text.Search.writeSearchIndex(
           d.where(col("doc_id") < 400), "text", "doc_id", p)
@@ -602,7 +605,7 @@ object SparkEntry {
   private[graft] def buildIvfStore(s: SparkSession, dir: String): String =
     sharedBuild("ivfidx", dir) { p =>
       deleteRecursively(p)
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, s"$dir/embeddings.parquet")
       val w = org.apache.spark.sql.expressions.Window.orderBy("vec_id")
       val cents = e.orderBy("vec_id").limit(16)
         .select((row_number().over(w) - 1).cast("long").as("centroid_id"),
@@ -624,7 +627,7 @@ object SparkEntry {
   private[graft] def buildIvfPqStore(s: SparkSession, dir: String): String =
     sharedBuild("ivfpqidx", dir) { p =>
       deleteRecursively(p)
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, s"$dir/embeddings.parquet")
       val w = org.apache.spark.sql.expressions.Window.orderBy("vec_id")
       val cents = e.orderBy("vec_id").limit(16)
         .select((row_number().over(w) - 1).cast("long").as("centroid_id"),

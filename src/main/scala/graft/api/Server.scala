@@ -3,7 +3,7 @@ package graft.api
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.compile.GraphCompiler
 import graft.cube.Cube
-import graft.ops.{Scan, Sinks}
+import graft.ops.{Scan, Sinks, Tables}
 import org.apache.spark.sql.SparkSession
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
@@ -31,6 +31,8 @@ import java.util.concurrent.{CancellationException, CompletableFuture,
   *    `sparkContext.cancelJobGroup` — no process kill needed.
   *  - concurrency: the reference serializes via 3 single-thread workers;
   *    here a thread pool shares the session (Spark schedules fairly).
+  *  - request size: a graph body longer than [[Server.MaxBodyBytes]] is
+  *    answered 413 without being held in memory.
   */
 final class Server(spark: SparkSession, catalog: Catalog,
     resultRoot: String, port: Int = 0) {
@@ -46,37 +48,11 @@ final class Server(spark: SparkSession, catalog: Catalog,
 
   def start(): Server = {
     server.createContext("/graph", (ex: HttpExchange) => handle(ex) {
-      case "POST" =>
-        val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-        val jobId = md5(body)
-        val job = new CompletableFuture[String]()
-        Option(jobs.putIfAbsent(jobId, job)) match {
-          case Some(prior) =>
-            val path = try prior.get()
-              catch { case e: ExecutionException => throw e.getCause }
-            (200, s"""{"output":"$path","cached":true}""")
-          case None =>
-            spark.sparkContext.setJobGroup(jobId,
-              s"graft job $jobId", interruptOnCancel = true)
-            try {
-              val compiler = new GraphCompiler(spark, catalog.specs,
-                s"$resultRoot/$jobId")
-              val path = compiler.compile(body) match {
-                case p: String => p // save_result already wrote
-                case c: Cube => Sinks.saveResult(c, "PARQUET",
-                  s"$resultRoot/$jobId")
-                case other => Sinks.saveResult(other, "JSON",
-                  s"$resultRoot/$jobId")
-              }
-              job.complete(path)
-              (200, s"""{"output":"$path","cached":false}""")
-            } catch {
-              case t: Throwable =>
-                jobs.remove(jobId, job)
-                job.completeExceptionally(t)
-                throw t
-            } finally spark.sparkContext.clearJobGroup()
-        }
+      case "POST" => readBody(ex) match {
+        case Some(body) => post(body)
+        case None => (413, json.createObjectNode().put("error",
+          s"request body exceeds ${Server.MaxBodyBytes} bytes").toString)
+      }
     })
     server.createContext("/collections", (ex: HttpExchange) => handle(ex) {
       case "GET" =>
@@ -106,6 +82,40 @@ final class Server(spark: SparkSession, catalog: Catalog,
     this
   }
 
+  /** Run a graph POST: the first POST of a graph runs it, an identical
+    * one waits on the same future. */
+  private def post(body: String): (Int, String) = {
+    val jobId = md5(body)
+    val job = new CompletableFuture[String]()
+    Option(jobs.putIfAbsent(jobId, job)) match {
+      case Some(prior) =>
+        val path = try prior.get()
+          catch { case e: ExecutionException => throw e.getCause }
+        (200, s"""{"output":"$path","cached":true}""")
+      case None =>
+        spark.sparkContext.setJobGroup(jobId,
+          s"graft job $jobId", interruptOnCancel = true)
+        try {
+          val compiler = new GraphCompiler(spark, catalog.specs,
+            s"$resultRoot/$jobId")
+          val path = compiler.compile(body) match {
+            case p: String => p // save_result already wrote
+            case c: Cube => Sinks.saveResult(c, "PARQUET",
+              s"$resultRoot/$jobId")
+            case other => Sinks.saveResult(other, "JSON",
+              s"$resultRoot/$jobId")
+          }
+          job.complete(path)
+          (200, s"""{"output":"$path","cached":false}""")
+        } catch {
+          case t: Throwable =>
+            jobs.remove(jobId, job)
+            job.completeExceptionally(t)
+            throw t
+        } finally spark.sparkContext.clearJobGroup()
+    }
+  }
+
   def stop(): Unit = server.stop(0)
 
   private def handle(ex: HttpExchange)(
@@ -131,9 +141,29 @@ final class Server(spark: SparkSession, catalog: Catalog,
     ex.close()
   }
 
+  /** The request body as UTF-8, or None when it is longer than
+    * [[Server.MaxBodyBytes]]: by its declared length without reading it,
+    * otherwise after reading one byte past the bound. */
+  private def readBody(ex: HttpExchange): Option[String] = {
+    val declared = Option(ex.getRequestHeaders.getFirst("Content-Length"))
+      .flatMap(_.trim.toLongOption)
+    if (declared.exists(_ > Server.MaxBodyBytes)) None
+    else {
+      val bytes = ex.getRequestBody.readNBytes(Server.MaxBodyBytes + 1)
+      if (bytes.length > Server.MaxBodyBytes) None
+      else Some(new String(bytes, UTF_8))
+    }
+  }
+
   private def md5(s: String): String =
     MessageDigest.getInstance("MD5").digest(s.getBytes(UTF_8))
       .map("%02x".format(_)).mkString
+}
+
+object Server {
+  /** Largest accepted request body; a longer one gets a 413 reply. A
+    * 100,000-node process graph is about 7.5 MB. */
+  val MaxBodyBytes: Int = 32 << 20
 }
 
 /** Collection catalog over the parquet store — the reference scrapes a
@@ -163,7 +193,7 @@ final class Catalog(val specs: Map[String, Scan.CollectionSpec],
     specs.get(id).map { spec =>
       described.computeIfAbsent(id, _ => {
         import org.apache.spark.sql.functions._
-        val df = spark.read.parquet(spec.path)
+        val df = Tables.read(spark, spec.path)
         // one pass for extents AND the temporal cadence: the minimum
         // positive gap between consecutive distinct labels (tiny distinct
         // set — the time axis, not the cube)

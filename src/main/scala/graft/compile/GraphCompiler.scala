@@ -392,7 +392,7 @@ final class GraphCompiler(
           "TableNotFound",
           s"table '$id' not in this compiler's table catalog " +
             s"(${tables.keys.toSeq.sorted.mkString(", ")})"))
-        spark.read.parquet(path)
+        Tables.read(spark, path)
       case "load_snapshot" =>
         // lakehouse tier on the graph surface: a snapshot-table read,
         // optionally pinned (`version_as_of`) and optionally filtered

@@ -80,13 +80,15 @@ final case class Cube(df: DataFrame, meta: CubeMeta = CubeMeta()) {
   def dimsExcept(dim: String): Seq[String] = dims.filterNot(_ == dim)
 
   /** Wide (one column per band) view for band math — the analogue of the
-    * reference's DataArray→Dataset flip (openeo_odc_driver.py:1513). */
+    * reference's DataArray→Dataset flip (openeo_odc_driver.py:1513).
+    * With a known `meta.bandOrder` the pivot takes those labels and stays
+    * lazy; only without one does Spark collect the distinct bands first,
+    * which runs the cube's plan eagerly. */
   def wide: DataFrame = {
     require(has(Dim.Band), "wide view needs a band dimension")
-    val keys = dimsExcept(Dim.Band)
-    val p = df.groupBy(keys.map(col): _*).pivot(Dim.Band)
-    (if (meta.bandOrder.nonEmpty) df.groupBy(keys.map(col): _*)
-        .pivot(Dim.Band, meta.bandOrder) else p)
+    val g = df.groupBy(dimsExcept(Dim.Band).map(col): _*)
+    (if (meta.bandOrder.nonEmpty) g.pivot(Dim.Band, meta.bandOrder)
+      else g.pivot(Dim.Band))
       .agg(first(col(ValueCol), ignoreNulls = true))
   }
 }

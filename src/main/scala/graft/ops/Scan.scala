@@ -14,6 +14,12 @@ import org.apache.spark.sql.functions._
   * PushedFilters / partition pruning, and scale/offset/nodata are scan-level
   * projections — Catalyst fuses them into the read stage.
   *
+  * The schema comes from [[Tables.read]], the way the reference takes it
+  * from the ODC index it already holds: a collection's schema is
+  * inferred on its first load (one Spark job over the footers) and read
+  * from the registry afterwards, until the store's listing changes. A
+  * load therefore starts no Spark job of its own.
+  *
   * 100 TB layout contract: collections are written partitioned by date
   * (and optionally by spatial tile), sorted within files by (band, y, x) so
   * min/max row-group stats make x/y range predicates effective.
@@ -75,7 +81,7 @@ object Scan {
       // general CRS reference for the spatial extent (proj-string capable);
       // overrides bboxEpsg/polygonEpsg when set
       extentCrs: Option[CrsRef] = None): Cube = {
-    var df = spark.read.parquet(spec.path)
+    var df = Tables.read(spark, spec.path)
     val meta = CubeMeta(crs = spec.crs, grid = spec.grid,
       bandOrder = if (bands.nonEmpty) bands else spec.bandOrder)
     // one marker probe per load: gates BOTH pruning and the reserved-
@@ -161,7 +167,7 @@ object Scan {
   /** `load_result` — previous job outputs are persisted as parquet cubes
     * (openeo_odc_driver.py:1598-1609 reloads NetCDF). */
   def loadResult(spark: SparkSession, resultDir: String, jobId: String): Cube =
-    Cube(spark.read.parquet(s"$resultDir/$jobId"))
+    Cube(Tables.read(spark, s"$resultDir/$jobId"))
 
   /** `load_result` from a NetCDF-3 classic (CDF-1) file — the read half
     * of [[Sinks.writeNetcdf]]'s write half, closing the reference's

@@ -12,11 +12,12 @@ import javax.imageio.ImageIO
 /** `save_result` sinks (SURVEY.md §2.1 S5-S8).
   *
   * The canonical persisted form is parquet (distributed write — the 100 TB
-  * path); PNG/GeoTIFF/JSON are presentation renditions of an
+  * path); PNG/GeoTIFF/JSON/NetCDF are presentation renditions of an
   * already-reduced raster, so they collect to the driver exactly like the
-  * reference materializes the Dask cube before imageio/rasterio writes
-  * (openeo_odc_driver.py:1616-1827). A 4-D cube to GTiff raises like the
-  * reference (openeo_odc_driver.py:1703).
+  * reference materializes the Dask cube before imageio/rasterio/xarray
+  * writes (openeo_odc_driver.py:1616-1827); a NETCDF save writes its
+  * parquet result from those same collected rows. A 4-D cube to GTiff
+  * raises like the reference (openeo_odc_driver.py:1703).
   */
 object Sinks {
 
@@ -113,22 +114,32 @@ object Sinks {
         case "GTIFF"  => writeGTiff(c, s"$outDir/result.tif")
         case "JSON"   => writeJsonCube(c, s"$outDir/result.json")
         case "NETCDF" | "PARQUET" =>
-          // canonical distributed sink; optional dtype cast like the
-          // reference's options.dtype (openeo_odc_driver.py:1731-1732)
+          // optional dtype cast like the reference's options.dtype
+          // (openeo_odc_driver.py:1731-1732)
           val dtype = options.flatMap(o => Option(o.get("dtype"))).map(_.asText)
           val df = dtype.map(t =>
             c.df.withColumn(Cube.ValueCol, col(Cube.ValueCol).cast(t)))
             .getOrElse(c.df)
-          df.write.mode("overwrite").parquet(s"$outDir/result.parquet")
-          // a client asking for NETCDF also gets a real .nc rendition
-          // (NetCDF-3 classic) of the SAME (dtype-cast) values; collect-
-          // to-driver like the reference's to_netcdf materialization
-          // (openeo_odc_driver.py:1726-1781). Empty cubes skip the
-          // rendition: classic NetCDF cannot express a 0-length fixed
-          // dimension, and the canonical parquet result already exists.
-          if (fmt == "NETCDF" && !df.isEmpty)
-            writeNetcdf(c.withDF(df), s"$outDir/result.nc")
-          s"$outDir/result.parquet"
+          val parquet = s"$outDir/result.parquet"
+          if (fmt == "PARQUET")  // canonical distributed sink
+            df.write.mode("overwrite").parquet(parquet)
+          else {
+            // NETCDF executes the plan ONCE: collect to the driver, as
+            // the reference's to_netcdf materializes the cube
+            // (openeo_odc_driver.py:1726-1781), then derive both
+            // renditions from those rows. The parquet result is written
+            // from a local relation with the same schema, so it holds the
+            // same (dtype-cast) values without running the plan again.
+            // Empty cubes skip the .nc: classic NetCDF cannot express a
+            // 0-length fixed dimension, and the parquet result exists.
+            val rows = df.collect()
+            df.sparkSession.createDataFrame(
+              java.util.Arrays.asList(rows: _*), df.schema)
+              .write.mode("overwrite").parquet(parquet)
+            if (rows.nonEmpty)
+              renderNetcdf(c.withDF(df), rows, s"$outDir/result.nc")
+          }
+          parquet
         case other => throw new IllegalArgumentException(s"format: $other")
       }
       case ds: org.apache.spark.sql.Dataset[_] =>  // zonal stats / fit params
@@ -161,9 +172,14 @@ object Sinks {
     * padded to 4 bytes, per the public CDF-1 spec. An independent
     * pure-Python parser (`tools/nc3check.py`) cross-validates the writer
     * against a second implementation of the spec. */
-  def writeNetcdf(c: Cube, path: String): String = {
+  def writeNetcdf(c: Cube, path: String): String =
+    renderNetcdf(c, c.df.collect(), path)
+
+  /** Render already-collected `rows` of `c` (its schema and metadata
+    * only; the plan is not run) as the NetCDF file [[writeNetcdf]]
+    * describes. */
+  private def renderNetcdf(c: Cube, rows: Array[Row], path: String): String = {
     val hasTime = c.has(Dim.Time); val hasBand = c.has(Dim.Band)
-    val rows = c.df.collect()
     val times: Seq[java.sql.Timestamp] =
       if (hasTime) rows.map(_.getAs[java.sql.Timestamp](Dim.Time))
         .distinct.sortBy(_.getTime).toSeq

@@ -43,6 +43,24 @@ class LawsSpec extends SparkSpec {
     }
   }
 
+  test("law: wide with a known bandOrder starts no job and equals the " +
+      "explicit pivot; without one it pivots the distinct bands") {
+    for (seed <- 1L to 3L) {
+      val c = randomCube(seed)
+      val keys = c.dimsExcept(Dim.Band).map(col)
+      val (wide, jobs) = jobsDuring(c.wide)
+      jobs shouldBe 0
+      val explicit = c.df.groupBy(keys: _*).pivot(Dim.Band, c.meta.bandOrder)
+        .agg(first(col(Cube.ValueCol), ignoreNulls = true))
+      wide.columns shouldBe explicit.columns
+      rowSet(wide) shouldBe rowSet(explicit)
+      val inferred = c.copy(meta = c.meta.copy(bandOrder = Nil)).wide
+      inferred.columns.toSeq shouldBe
+        c.dimsExcept(Dim.Band) ++ c.meta.bandOrder.sorted
+      rowSet(inferred.select(wide.columns.map(col): _*)) shouldBe rowSet(wide)
+    }
+  }
+
   test("law: mask is idempotent (mask∘mask = mask)") {
     for (seed <- 1L to 3L) {
       val c = randomCube(seed)

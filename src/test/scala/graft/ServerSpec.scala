@@ -276,4 +276,52 @@ class ServerSpec extends SparkSpec {
     res.statusCode() shouldBe 500
     new com.fasterxml.jackson.databind.ObjectMapper().readTree(res.body()).has("error") shouldBe true
   }
+
+  test("a request body over the bound gets a 413 JSON reply") {
+    val limit = Server.MaxBodyBytes
+    // raw HTTP/1.1 over a socket: returns (status, body) of the reply
+    def exchange(head: String)(send: java.io.OutputStream => Unit): (Int, String) = {
+      val sock = new java.net.Socket("127.0.0.1", server.boundPort)
+      try {
+        sock.setSoTimeout(60000)
+        val out = new java.io.BufferedOutputStream(sock.getOutputStream)
+        out.write(("POST /graph HTTP/1.1\r\nHost: 127.0.0.1\r\n" + head +
+          "\r\n").getBytes("US-ASCII"))
+        send(out); out.flush()
+        val in = new java.io.DataInputStream(
+          new java.io.BufferedInputStream(sock.getInputStream))
+        def line(): String = {
+          val b = new StringBuilder
+          var c = in.read()
+          while (c != '\n' && c != -1) { if (c != '\r') b += c.toChar; c = in.read() }
+          b.toString
+        }
+        val status = line().split(" ")(1).toInt
+        val headers = Iterator.continually(line()).takeWhile(_.nonEmpty).toSeq
+        val len = headers.collectFirst {
+          case h if h.toLowerCase.startsWith("content-length:") =>
+            h.split(":")(1).trim.toInt }.get
+        val body = new Array[Byte](len); in.readFully(body)
+        (status, new String(body, "UTF-8"))
+      } finally sock.close()
+    }
+    def check(reply: (Int, String)): Unit = {
+      reply._1 shouldBe 413
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(reply._2)
+        .get("error").asText should include(limit.toString)
+    }
+    // a declared length over the bound is answered before any body byte
+    check(exchange(s"Content-Length: ${limit + 1L}\r\n")(_ => ()))
+    // a chunked body is read up to one byte past the bound
+    check(exchange("Transfer-Encoding: chunked\r\n") { out =>
+      val chunk = Array.fill[Byte](1 << 20)(' '.toByte)
+      def send(n: Int): Unit = {
+        out.write(s"${Integer.toHexString(n)}\r\n".getBytes("US-ASCII"))
+        out.write(chunk, 0, n); out.write("\r\n".getBytes("US-ASCII"))
+      }
+      (0 until limit / chunk.length).foreach(_ => send(chunk.length))
+      send(1)
+      out.write("0\r\n\r\n".getBytes("US-ASCII"))
+    })
+  }
 }

@@ -296,4 +296,64 @@ class SinksSpec extends SparkSpec {
     val floats = (0 until 4).map(i => buf.getFloat(nc.length - 16 + i * 4))
     floats.filterNot(_.isNaN).toSet shouldBe Set(2f, 3f)
   }
+
+  /** A 4-D cube read from parquet whose value passes a UDF that counts
+    * the rows it sees, so every execution of the plan shows in `acc`. */
+  private def countedCube(acc: org.apache.spark.util.LongAccumulator,
+      empty: Boolean = false): (Cube, Long) = {
+    import org.apache.spark.sql.functions._
+    val src = s"${java.nio.file.Files.createTempDirectory("nc-src")}/c"
+    val rows = for { d <- 1 to 3; b <- Seq("B04", "B08"); y <- 0 to 2; x <- 0 to 3 }
+      yield (ts(s"2024-03-0$d 00:00:00"), b, y.toDouble, x.toDouble,
+        d * 100.0 + y * 4 + x + (if (b == "B08") 0.5 else 0.0))
+    rows.toDF("time", "band", "y", "x", "value").write.parquet(src)
+    val counting = udf((v: Double) => { acc.add(1); v })
+    val counted = spark.read.parquet(src)
+      .withColumn("value", counting(col("value")))
+    // every value is positive; the filter moves below the projection, so
+    // each row still passes the counting UDF once
+    val df = if (empty) counted.where(col("value") < 0) else counted
+    (Cube(df, CubeMeta(crs = Some("EPSG:32632"), bandOrder = Seq("B04", "B08"))),
+      rows.size.toLong)
+  }
+
+  test("a NETCDF save executes the cube's plan once; its parquet equals " +
+      "the PARQUET save's") {
+    val acc = spark.sparkContext.longAccumulator("nc-rows")
+    val (c, n) = countedCube(acc)
+    val out = java.nio.file.Files.createTempDirectory("nc-once").toString
+    Sinks.saveResult(c, "NETCDF", out) shouldBe s"$out/result.parquet"
+    acc.value shouldBe n
+    val ref = java.nio.file.Files.createTempDirectory("nc-ref").toString
+    Sinks.saveResult(c, "PARQUET", ref)
+    val got = spark.read.parquet(s"$out/result.parquet")
+    val want = spark.read.parquet(s"$ref/result.parquet")
+    got.schema shouldBe want.schema
+    got.collect().map(_.toSeq).sortBy(_.mkString("|")) shouldBe
+      want.collect().map(_.toSeq).sortBy(_.mkString("|"))
+    // the .nc rendition holds the same cells
+    val nc = graft.ops.Scan.loadResultNetcdf(spark, s"$out/result.nc")
+    rowSet(nc.df.select("time", "band", "y", "x", "value")) shouldBe
+      rowSet(want.select(org.apache.spark.sql.functions.col("time"),
+        org.apache.spark.sql.functions.col("band"),
+        org.apache.spark.sql.functions.col("y"),
+        org.apache.spark.sql.functions.col("x"),
+        org.apache.spark.sql.functions.col("value").cast("float")))
+  }
+
+  test("an empty cube saved as NETCDF writes result.parquet and no .nc, " +
+      "executing its plan once") {
+    val acc = spark.sparkContext.longAccumulator("nc-empty-rows")
+    val (c, n) = countedCube(acc, empty = true)
+    val out = java.nio.file.Files.createTempDirectory("nc-empty").toString
+    val (_, jobs) = jobsDuring(Sinks.saveResult(c, "NETCDF", out))
+    acc.value shouldBe n
+    // the collect, then the write of the (empty) collected rows, which
+    // does not run the plan
+    jobs shouldBe 2
+    new java.io.File(s"$out/result.nc").exists shouldBe false
+    val back = spark.read.parquet(s"$out/result.parquet")
+    back.count() shouldBe 0
+    back.schema.fieldNames shouldBe c.df.schema.fieldNames
+  }
 }

@@ -40,4 +40,43 @@ abstract class SparkSpec extends AnyFunSuite with Matchers {
 
   def rowSet(df: DataFrame): Set[Seq[Any]] =
     df.collect().toSet.map((r: Row) => r.toSeq)
+
+  /** `f`'s result and the number of Spark jobs it started, counted by a
+    * listener under a job group of its own. A one-task fence job run
+    * after `f` proves, once its end event arrives, that every earlier
+    * job-start event has been delivered (the listener bus is ordered). */
+  def jobsDuring[T](f: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val fenceKey = "graft.test.fence"
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val fenceIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) {
+          if (e.properties.getProperty(fenceKey) != null) fenceIds.add(e.jobId)
+          else started.incrementAndGet()
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (fenceIds.contains(e.jobId)) fenced.countDown()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val r = f
+      sc.setLocalProperty(fenceKey, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(fenceKey, null)
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "fence job's end event never arrived")
+      (r, started.get())
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
