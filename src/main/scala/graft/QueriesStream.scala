@@ -17,8 +17,15 @@ private[graft] object QueriesStream {
 
   /** Run `body` with watermark-only (no-data) micro-batches disabled,
     * restoring the session default after. Each no-data batch costs a
-    * full state-commit cycle (the r13 floor breakdown: ~0.6–1.7 s per
-    * batch at sf0.1 regardless of row count); rows whose output needs a
+    * full state-commit cycle: offset and commit log entries plus a delta
+    * file per state partition (the r13 floor breakdown: ~0.6–1.7 s per
+    * batch at sf0.1 regardless of row count). Part of that floor was
+    * the `chmod`/`readlink` process the stock Hadoop local file system
+    * started per written file. [[graft.io.LocalFs]] starts none: a
+    * batch of `q_stream_agg_period` now takes ~0.18 s of trigger time at
+    * sf0.001 (0.35 s before, traced perfbench run), and the row at
+    * sf0.01 went from 2.3-2.6 s to 1.6-1.7 s (two exclusive
+    * `graft.Bench` runs each). Rows whose output needs a
     * watermark-driven flush feed an explicit sentinel batch instead —
     * one tiny data batch replaces every feeding round's no-data cycle.
     * The join rows established the pattern (r13); r14 extends it to the

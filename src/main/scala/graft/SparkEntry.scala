@@ -36,10 +36,22 @@ object SparkEntry {
     * generations read to the same µs cube time axis. The schema comes
     * from [[Tables.read]]: inferred on the first read of a fixture
     * directory, then taken from the registry, so a repeated read starts
-    * no Spark job. */
+    * no Spark job.
+    *
+    * `nanosAsLong` is set on the session only when inference refuses the
+    * file (a NANOS column), and then stays set, since the scan needs it
+    * when it executes. A µs file leaves the session's confs untouched
+    * and costs no extra footer read or job. */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = Tables.read(spark, s"$dir/events.parquet")
+    val path = s"$dir/events.parquet"
+    val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+    val raw = try Tables.read(spark, path) catch {
+      case e: org.apache.spark.sql.AnalysisException
+          if e.getCondition == "PARQUET_TYPE_ILLEGAL" &&
+            spark.conf.get(nanosAsLong, "false") != "true" =>
+        spark.conf.set(nanosAsLong, "true")
+        Tables.read(spark, path)
+    }
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
@@ -254,11 +266,18 @@ object SparkEntry {
 
   /** Streaming harness conf: a MemoryStream micro-batch pays one state
     * -store commit PER STATE PARTITION per batch, so a bench session's
-    * 32 shuffle partitions multiply fixed commit overhead ~8× without
-    * adding parallelism (state rows per tiny batch ≪ partitions). Every
-    * `q_stream_*` row therefore runs with 4 shuffle (= state) partitions
-    * — the measured sweet spot (fewer concentrates stream-stream join
-    * work) — and the session's previous value is restored afterwards.
+    * 32 shuffle partitions multiply the per-commit cost ~8× without
+    * adding parallelism (state rows per tiny batch ≪ partitions). That
+    * cost was mostly not Spark's: each commit writes and renames a few
+    * small files, and the stock Hadoop local file system started a
+    * `chmod` or `readlink` process for each (440 per call of
+    * `q_stream_agg_period`). [[graft.io.LocalFs]] does that work
+    * in-process; the 23 `q_stream_*` rows at sf0.01 went from 44.8 and
+    * 48.0 s to 33.1 and 30.2 s (two exclusive `graft.Bench` runs each).
+    * Every `q_stream_*` row runs with 4 shuffle (= state) partitions and
+    * the session's previous value is restored afterwards. The 2/4/8
+    * sweep with fork-free commits (same runs) read 27.9/31.0,
+    * 33.1/30.2 and 37.4/32.8 s: 8 lost, 2 did not beat 4 in both runs.
     * Results are partitioning-invariant (StreamingSpec pins it; each
     * row's oracle is a declarative batch twin). The setting is captured
     * at `start()`, so wrapping the whole query body is sufficient and a

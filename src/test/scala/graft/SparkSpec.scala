@@ -5,16 +5,16 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 /** Shared local SparkSession for all specs (one JVM-wide session — specs
-  * run forked in a single test JVM). */
+  * run forked in a single test JVM). Built through [[GraftSession.tuned]],
+  * so the specs run on the product's confs, file system and extensions. */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = GraftSession.tuned(SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
+      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

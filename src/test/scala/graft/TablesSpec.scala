@@ -104,6 +104,65 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  test("readEvents of a µs events file leaves nanosAsLong as it found it " +
+      "and starts no job once the schema is known") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val before = spark.conf.getOption(key)
+    val dir = tmp("tables-events-us")
+    Seq((ts("2024-02-01 10:00:00.123456"), "view", 3L, 1.5))
+      .toDF("ts", "event_type", "user_id", "value")
+      .write.parquet(s"$dir/events.parquet")
+    val dirs = dir +: Seq("/root/testdata/sf0.001")
+      .filter(d => new java.io.File(s"$d/events.parquet").exists)
+    try for (found <- Seq(None, Some("false")); d <- dirs) withClue(s"$d $found: ") {
+      found match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+      val confs = spark.conf.getAll // the explicitly set values
+      confs.get(key) shouldBe found
+      SparkEntry.readEvents(spark, d)
+      val (ev, jobs) = jobsDuring(SparkEntry.readEvents(spark, d))
+      jobs shouldBe 0
+      ev.schema("ts").dataType.simpleString shouldBe "timestamp"
+      spark.conf.getAll shouldBe confs
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    SparkEntry.readEvents(spark, dir).select("ts").as[java.sql.Timestamp]
+      .collect() shouldBe Array(ts("2024-02-01 10:00:00.123456"))
+  }
+
+  test("readEvents of a TIMESTAMP(NANOS) events file reads µs, truncating") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val dir = tmp("tables-events-nanos")
+    val w = ExampleParquetWriter.builder(
+        new org.apache.hadoop.fs.Path(s"$dir/events.parquet/part-0.parquet"))
+      .withType(schema).withConf(spark.sparkContext.hadoopConfiguration)
+      .build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("ts", 1706781600123456789L)) // 2024-02-01 10:00:00.123456789 UTC
+    finally w.close()
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val before = spark.conf.getOption(key)
+    try {
+      spark.conf.unset(key)
+      val ev = SparkEntry.readEvents(spark, dir)
+      ev.schema("ts").dataType.simpleString shouldBe "timestamp"
+      ev.select("ts").as[java.sql.Timestamp].collect() shouldBe
+        Array(java.sql.Timestamp.from(
+          java.time.Instant.ofEpochSecond(1706781600L, 123456000L)))
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("a second read of an unchanged path starts no Spark job") {
     val p = s"${tmp("tables-jobs")}/t"
     (1 to 100).map(i => (i, i * 0.5)).toDF("i", "v").write.parquet(p)
