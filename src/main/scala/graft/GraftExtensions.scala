@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 
 /** Session-build registration of every graft native SQL function — the
   * cluster-deployment surface:
@@ -39,6 +41,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // into the CoW commit protocol (the Delta V1-command-fallback
     // architecture — see graft.plans.SnapshotDmlRule)
     ext.injectPostHocResolutionRule(s => graft.plans.SnapshotDmlRule(s))
+    // physical plans: per-request constants become generated-code
+    // parameters, right before whole-stage codegen, with and without
+    // adaptive execution (see graft.plans.ParameterizeLiterals)
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] =
+        graft.plans.ParameterizeLiterals
+    })
   }
 }
 
@@ -63,7 +72,9 @@ object GraftExtensions {
   /** Register everything on a LIVE session (the extensions path only
     * applies at session build): the functions, the table-valued
     * functions, the as-of join strategy and the band-join rule.
-    * Idempotent. */
+    * Idempotent. The SQL DML rule and the literal parameterization have
+    * no live-session hook: only a session built with these extensions
+    * has them. */
   def registerAll(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     functionInjections.foreach { case (id, info, builder) =>

@@ -30,7 +30,11 @@ import java.util.concurrent.{CancellationException, CompletableFuture,
   *    with a job group, and DELETE cancels the group —
   *    `sparkContext.cancelJobGroup` — no process kill needed.
   *  - concurrency: the reference serializes via 3 single-thread workers;
-  *    here a thread pool shares the session (Spark schedules fairly).
+  *    here 4 request threads share the session, and Spark's default FIFO
+  *    scheduler runs their jobs: a job's tasks queue behind those of jobs
+  *    submitted before it, whatever request they serve.
+  *  - graph size: a graph of more than `ProcessGraph.MaxNodes` nodes is
+  *    answered 400 (`ProcessGraphComplexity`) at parse time.
   *  - request size: a graph body longer than [[Server.MaxBodyBytes]] is
   *    answered 413 without being held in memory.
   */

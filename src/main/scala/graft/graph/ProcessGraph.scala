@@ -37,12 +37,25 @@ object ProcessGraph {
     }
   }
 
+  /** Most nodes a process graph may hold, callback nodes included. A
+    * larger graph is refused at parse time with a typed openEO error
+    * (a 400 from the server) before any work grows with its size; real
+    * graphs hold tens of nodes. The cap bounds the count, not the depth:
+    * composing a `from_node` chain is quadratic in its length (a
+    * 200-node chain took 12 s) and a 1,000-node chain still overflows
+    * Catalyst's stack. */
+  val MaxNodes: Int = 1000
+
   def parse(json: String): ProcessGraph = {
     val root = new ObjectMapper().readTree(json)
     // accept either the bare graph or {"process_graph": {...}} wrapping
     val graphNode =
       if (root.has("process_graph")) root.get("process_graph") else root
-    fromJson(graphNode)
+    val g = fromJson(graphNode)
+    val n = g.size
+    if (n > MaxNodes) throw graft.OpenEoError("ProcessGraphComplexity",
+      s"The process graph has $n nodes; at most $MaxNodes are accepted.")
+    g
   }
 
   def fromJson(graphNode: JsonNode): ProcessGraph = {
@@ -75,21 +88,44 @@ final case class ProcessGraph(nodes: Map[String, ProcessGraph.Node]) {
   def externalDeps: Seq[String] =
     nodes.values.toSeq.flatMap(_.deps).distinct.filterNot(nodes.contains)
 
+  /** Number of nodes, callback nodes included. */
+  def size: Int = {
+    def argSize(a: Arg): Int = a match {
+      case SubGraph(g) => g.size
+      case ArrayArg(xs) => xs.map(argSize).sum
+      case _ => 0
+    }
+    nodes.values.map(n => 1 + n.arguments.values.map(argSize).sum).sum
+  }
+
   /** Topological order (dependencies first) — the reference's
     * `.sort(by='result')` planner (openeo_odc_driver.py:90). Deterministic:
-    * ties broken by node id. */
+    * roots and each node's dependencies are visited in node-id order, and
+    * a node follows its dependencies (DFS post-order). An explicit stack
+    * replaces recursion, so a long `from_node` chain cannot overflow the
+    * thread's stack. */
   def topoSorted: Seq[Node] = {
     val visited = scala.collection.mutable.LinkedHashSet[String]()
     val visiting = scala.collection.mutable.Set[String]()
-    def visit(id: String): Unit = {
+    // one frame per node on the DFS path: the node and its unvisited deps
+    val path = scala.collection.mutable.Stack[(String, Iterator[String])]()
+    def enter(id: String): Unit =
       if (!visited.contains(id) && nodes.contains(id)) {
         require(visiting.add(id), s"process graph cycle at node $id")
-        nodes(id).deps.distinct.sorted.foreach(visit)
-        visiting.remove(id)
-        visited.add(id)
+        path.push((id, nodes(id).deps.distinct.sorted.iterator))
+      }
+    nodes.keys.toSeq.sorted.foreach { root =>
+      enter(root)
+      while (path.nonEmpty) {
+        val (id, deps) = path.top
+        if (deps.hasNext) enter(deps.next())
+        else {
+          path.pop()
+          visiting.remove(id)
+          visited.add(id)
+        }
       }
     }
-    nodes.keys.toSeq.sorted.foreach(visit)
     visited.toSeq.map(nodes)
   }
 

@@ -1,8 +1,8 @@
 package graft.io
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
-  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream,
+  FileStatus, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 import java.net.URI
@@ -25,8 +25,8 @@ import java.nio.file.{Files, attribute}
   * [[LocalFs.CheckedContext]] is `ChecksumFs` over a
   * `DelegateToFileSystem` (the FileContext API, which Spark's streaming
   * checkpoint manager uses). Both write `.crc` sidecars and verify them
-  * on read as the stock classes do (FileContext: `open(path, bufferSize)`
-  * only; Hadoop's `FilterFs.open(path)` skips `ChecksumFs`), and
+  * on read as the stock classes do (through FileContext, `open(path)`
+  * included, which stock `FilterFs` sends past `ChecksumFs`), and
   * renames stay atomic. [[LocalFs.Confs]] registers them for `file:`. */
 object LocalFs {
 
@@ -81,9 +81,16 @@ object LocalFs {
   class Checked extends LocalFileSystem(new Raw)
 
   /** The FileContext front end: `ChecksumFs` over [[RawContext]], the
-    * same layering as Hadoop's `org.apache.hadoop.fs.local.LocalFs`. */
+    * same layering as Hadoop's `org.apache.hadoop.fs.local.LocalFs`.
+    * `open(path)` reads through `ChecksumFs` as `open(path, bufferSize)`
+    * does: Hadoop's `FilterFs.open(path)` would hand it to the raw file
+    * system unverified, and that is the call Spark's checkpoint manager
+    * makes for offset, commit and state files. */
   class CheckedContext(uri: URI, conf: Configuration)
-      extends ChecksumFs(new RawContext(uri, conf))
+      extends ChecksumFs(new RawContext(uri, conf)) {
+    override def open(f: Path): FSDataInputStream =
+      open(f, getServerDefaults(f).getFileBufferSize)
+  }
 
   /** [[Raw]] as an `AbstractFileSystem`, with the settings of Hadoop's
     * `org.apache.hadoop.fs.local.RawLocalFs`. */

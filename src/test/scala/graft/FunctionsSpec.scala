@@ -1,8 +1,11 @@
 package graft
 
 import graft.cube.Cube
-import graft.functions.{CurveFit, ProductAgg, ScalarExpr}
+import graft.functions.{CurveFit, ProductAgg, RefCodegen, RefCodegen2, ScalarExpr}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
+  UnaryExpression}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 class FunctionsSpec extends SparkSpec {
 
@@ -94,4 +97,41 @@ class FunctionsSpec extends SparkSpec {
     r("a") shouldBe -6.0
     assert(r("b") == null)
   }
+
+  test("a RefCodegen expression whose nullSafeEval returns null fails loudly in codegen") {
+    val id = col("id")
+    val cases = Seq(
+      "nullmixer" -> NullMixer(Bridge.expression(id.cast("string"))),
+      "nullmixer2" -> NullMixer2(Bridge.expression(id.cast("double")),
+        Bridge.expression(id.cast("double"))))
+    for ((name, e) <- cases) {
+      val df = spark.range(0, 3, 1, 1).select(Bridge.column(e).as("v"))
+      spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+      val err = try intercept[Exception](df.collect())
+        finally spark.conf.unset("spark.sql.codegen.factoryMode")
+      val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+      withClue(causes.mkString("\n")) {
+        causes.exists(c => c.isInstanceOf[IllegalStateException] &&
+          c.getMessage.contains(name)) shouldBe true
+      }
+    }
+  }
+}
+
+/** Test-only [[graft.functions.RefCodegen]] mixers that break the
+  * contract: a null result on non-null input. */
+case class NullMixer(child: Expression) extends UnaryExpression with RefCodegen {
+  override def dataType: org.apache.spark.sql.types.DataType =
+    org.apache.spark.sql.types.StringType
+  override protected def nullSafeEval(v: Any): Any = null
+  override protected def withNewChildInternal(c: Expression): NullMixer = copy(child = c)
+}
+
+case class NullMixer2(left: Expression, right: Expression)
+    extends BinaryExpression with RefCodegen2 {
+  override def dataType: org.apache.spark.sql.types.DataType =
+    org.apache.spark.sql.types.DoubleType
+  override protected def nullSafeEval(l: Any, r: Any): Any = null
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): NullMixer2 =
+    copy(left = l, right = r)
 }

@@ -126,6 +126,26 @@ class LocalFsSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("FileContext open(path) verifies checksums on graft, as the " +
+      "checkpoint manager reads") {
+    val fc = FileContext.getFileContext(URI.create("file:///"), graftConf())
+    val root = tmp("localfs-crc-open")
+    val p = new Path(new File(root, "offsets").toURI)
+    val data = Array.tabulate[Byte](4096)(i => (i * 17).toByte)
+    val out = fc.create(p, java.util.EnumSet.of(CreateFlag.CREATE))
+    try out.write(data) finally out.close()
+    def readAll(): Array[Byte] = {
+      val in = fc.open(p)
+      try { val b = new Array[Byte](data.length); in.readFully(b); b }
+      finally in.close()
+    }
+    readAll() shouldBe data
+    val raf = new java.io.RandomAccessFile(new File(root, "offsets"), "rw")
+    try { raf.seek(2000); raf.write(data(2000) ^ 1) } finally raf.close()
+    intercept[ChecksumException](readAll())
+    FileUtils.deleteDirectory(root)
+  }
+
   test("GraftSession's settings resolve file: to the fork-free classes") {
     val uri = URI.create("file:///")
     LocalFs.Confs.keys.foreach(_ should startWith("spark.hadoop.fs."))

@@ -261,8 +261,9 @@ class ServerSpec extends SparkSpec {
   }
 
   test("a graph that overflows the stack still gets a reply") {
-    // a 100,000-node linear from_node chain: the graph's recursive
-    // topological sort overflows the request thread's stack
+    // a 100,000-node linear from_node chain: composing it would overflow
+    // Catalyst's stack or run for minutes, so the node cap refuses it at
+    // parse time
     val n = 100000
     val graph = (1 until n).map(i =>
       s""""n$i":{"process_id":"absolute","arguments":{"x":{"from_node":"n${i - 1}"}}""" +
@@ -273,8 +274,10 @@ class ServerSpec extends SparkSpec {
         .timeout(java.time.Duration.ofSeconds(30))
         .POST(HttpRequest.BodyPublishers.ofString(graph)).build(),
       HttpResponse.BodyHandlers.ofString())
-    res.statusCode() shouldBe 500
-    new com.fasterxml.jackson.databind.ObjectMapper().readTree(res.body()).has("error") shouldBe true
+    res.statusCode() shouldBe 400
+    val body = new com.fasterxml.jackson.databind.ObjectMapper().readTree(res.body())
+    body.get("code").asText shouldBe "ProcessGraphComplexity"
+    body.get("message").asText should include(graft.graph.ProcessGraph.MaxNodes.toString)
   }
 
   test("a request body over the bound gets a 413 JSON reply") {

@@ -79,4 +79,16 @@ abstract class SparkSpec extends AnyFunSuite with Matchers {
       sc.removeSparkListener(listener)
     }
   }
+
+  /** `f`'s result and the number of Janino compiles (codegen cache
+    * misses, from Spark's `CodegenMetrics`) during it, read after the
+    * same fence job as [[jobsDuring]]. The count is JVM-wide: specs run
+    * one at a time, so it is this block's. */
+  def compilesDuring[T](f: => T): (T, Long) = {
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    val (r, _) = jobsDuring(f)
+    (r, compiles.getCount - before)
+  }
 }
