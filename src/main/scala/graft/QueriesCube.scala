@@ -1,7 +1,7 @@
 package graft
 
 import graft.cube.{Cube, CubeMeta, Dim, GridRef}
-import graft.functions.{CurveFit, ScalarExpr}
+import graft.functions.CurveFit
 import graft.ops._
 import graft.text.{Classifier, Dedup, Similarity, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -470,7 +470,7 @@ private[graft] object QueriesCube {
       // mean, a1 = 1e-6): a0 + a1·unix_seconds, oracle-matched
       val params = c.df.groupBy(Dim.Band, Dim.Y, Dim.X)
         .agg(array(dmean(col(Cube.ValueCol)), lit(1e-6)).as("params"))
-      CurveFit.predictCurve(c, params, ScalarExpr.linear).df
+      CurveFit.predictCurve(c, params, CurveFit.linear).df
     },
     // --- result store (S4) -------------------------------------------------
     "q_load_result" -> ((s, dir) => {

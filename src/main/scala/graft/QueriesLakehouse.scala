@@ -1,7 +1,6 @@
 package graft
 
 import graft.cube.{Cube, CubeMeta, Dim, GridRef}
-import graft.functions.{CurveFit, ScalarExpr}
 import graft.ops._
 import graft.text.{Classifier, Dedup, Similarity, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}

@@ -2,11 +2,11 @@ package graft.compile
 
 import com.fasterxml.jackson.databind.JsonNode
 import graft.cube.{Cube, Dim}
-import graft.functions.{CurveFit, ScalarExpr}
+import graft.functions.CurveFit
 import graft.graph.ProcessGraph
 import graft.graph.ProcessGraph._
 import graft.ops._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -20,20 +20,26 @@ import scala.jdk.CollectionConverters._
   * filter node, codegen across all element-wise nodes) — the cross-node
   * optimization the reference delegates to Dask graph construction.
   *
-  * Child process graphs (reducers / apply callbacks / overlap resolvers /
-  * model functions) compile to `Column` expressions or reducer names — the
-  * typed replacement for the reference's string-codegen + deferred-name
-  * convention (openeo_odc_driver.py:228-278, 535).
+  * Element-wise processes (M1-M15) come from one table,
+  * [[GraphCompiler.scalarOpByName]], in every position: a cube-level node
+  * (an all-literal one folds on the driver), and the child process graphs
+  * one callback walker compiles to a `Column` — apply callbacks, overlap
+  * resolvers, band reducers and fit_curve models, which differ only in how
+  * their leaves bind. Named-reducer callbacks compile to reducer names.
+  * This is the typed replacement for the reference's string-codegen +
+  * deferred-name convention (openeo_odc_driver.py:228-278, 535).
   *
   * Intermediate values (the reference's `partialResults` dict,
-  * openeo_odc_driver.py:87): Cube | scalar Double | String reducer name |
-  * DataFrame (zonal stats / fit params).
+  * openeo_odc_driver.py:87): Cube | scalar (Double, Boolean) | String
+  * reducer name | DataFrame (zonal stats / fit params).
   */
 final class GraphCompiler(
     spark: SparkSession,
     catalog: Map[String, Scan.CollectionSpec],
     resultRoot: String = "/tmp/graft-results",
     tables: Map[String, String] = Map.empty) {
+
+  import GraphCompiler._
 
   def compile(json: String): Any = run(ProcessGraph.parse(json))
 
@@ -200,15 +206,12 @@ final class GraphCompiler(
         reduceWithCallback(c, dim, subGraph(n, "reducer"))
       case "apply" =>
         val c = cubeArg(n, "data", r)
-        c.mapValue(v => compileScalar(subGraph(n, "process"), Map("x" -> v)))
+        c.mapValue(v => callback(subGraph(n, "process"), Map("x" -> v)))
       case "run_udf" =>
         // element-wise UDF source compiled to a Column expression — see
         // UdfCompiler (the reference ships chunks to an R pool instead,
         // openeo_odc_driver.py:282-339)
-        val src = n.arguments.get("udf") match {
-          case Some(LitArg(v)) if v.isTextual => v.asText
-          case other => throw new IllegalArgumentException(s"run_udf udf: $other")
-        }
+        val src = udfSource(n)
         // context keys chunk_size / num_jobs / vectorized
         // (openeo_odc_driver.py:304-316): validated for type errors so
         // reference graphs run unchanged, but advisory here — they steer
@@ -313,7 +316,7 @@ final class GraphCompiler(
       case "merge_cubes" =>
         val resolver = n.arguments.get("overlap_resolver").collect {
           case SubGraph(sg) => (x: Column, y: Column) =>
-            compileScalar(sg, Map("x" -> x, "y" -> y, "cube1" -> x, "cube2" -> y))
+            callback(sg, Map("x" -> x, "y" -> y, "cube1" -> x, "cube2" -> y))
         }
         Joins.mergeCubes(cubeArg(n, "cube1", r), cubeArg(n, "cube2", r), resolver)
       case "resample_cube_temporal" =>
@@ -355,15 +358,14 @@ final class GraphCompiler(
       case "array_interpolate_linear" =>
         Neighborhood.interpolateLinear(cubeArg(n, "data", r), "time")
       case "fit_curve" =>
-        CurveFit.fitCurve(cubeArg(n, "data", r),
-          compileModel(subGraph(n, "function")))
+        CurveFit.fitCurve(cubeArg(n, "data", r), model(subGraph(n, "function")))
       case "predict_curve" =>
         val params = resolve(n.arguments("parameters"), r) match {
           case ds: org.apache.spark.sql.Dataset[_] => ds.toDF()
           case other => throw new IllegalArgumentException(s"predict_curve parameters: $other")
         }
         CurveFit.predictCurve(cubeArg(n, "data", r), params,
-          compileModel(subGraph(n, "function")))
+          model(subGraph(n, "function")))
 
       // ---- SAR2Cube (D1, D2) ----
       case "geocode" =>
@@ -1019,28 +1021,29 @@ final class GraphCompiler(
     * cubes are coordinate-aligned with an inner equi-join on their shared
     * dims (xarray broadcasting), then ONE Column expression computes the
     * result — Catalyst fuses chains of these into a single codegen stage,
-    * where the reference builds one Dask layer per node. */
+    * where the reference builds one Dask layer per node. With no operand
+    * cube, the same expression over literals folds to a plain value, as
+    * the reference keeps Python numbers in partialResults
+    * (openeo_odc_driver.py:387-388). */
   private def applyPositionScalar(n: Node, r: collection.Map[String, Any]): Any = {
+    if (!scalarOpByName.contains(n.processId)) throw unsupported(n.processId)
     val resolved: Map[String, Any] = n.arguments.collect {
       case (k, a) if !a.isInstanceOf[SubGraph] => k -> resolve(a, r)
     }
+    // reference quirks: divide by literal zero is a compile-time error
+    // (DivisionByZero, openeo_odc_driver.py:436-437), and so is a
+    // multiply without both operands (MultiplicandMissing, :414)
+    if (n.processId == "divide" && resolved.get("y").contains(0.0))
+      throw graft.OpenEoError.DivisionByZero
+    if (n.processId == "multiply" &&
+        (!resolved.contains("x") || !resolved.contains("y")))
+      throw graft.OpenEoError.MultiplicandMissing
     val cubes: Seq[(String, Cube)] = resolved.toSeq.flatMap {
       case (k, c: Cube) => Seq(k -> c)
       case (k, xs: Seq[_]) => xs.zipWithIndex.collect {
         case (c: Cube, i) => s"$k#$i" -> c }
       case _ => Nil
     }.sortBy(_._1)
-    if (cubes.isEmpty) return scalarEval(n.processId, resolved)
-    // reference quirk: divide by literal zero is a compile-time error
-    // (DivisionByZero, openeo_odc_driver.py:436-437)
-    if (n.processId == "divide") resolved.get("y") match {
-      case Some(0.0) => throw graft.OpenEoError.DivisionByZero
-      case _ =>
-    }
-    // MultiplicandMissing (openeo_odc_driver.py:414)
-    if (n.processId == "multiply" &&
-        (!resolved.contains("x") || !resolved.contains("y")))
-      throw graft.OpenEoError.MultiplicandMissing
     var joined: DataFrame = null
     var dims: Seq[String] = Nil
     val valCols = scala.collection.mutable.Map[String, Column]()
@@ -1056,53 +1059,39 @@ final class GraphCompiler(
       }
       valCols(name) = col(vc)
     }
-    def argCol(k: String): Column = resolved.get(k) match {
-      case Some(_: Cube)    => valCols(k)
-      case Some(d: Double)  => lit(d)
-      case Some(b: Boolean) => lit(b)
-      case Some(null) | None => lit(null)
-      case Some(other) => throw new IllegalArgumentException(
+    def operand(k: String, v: Any): Column = v match {
+      case _: Cube    => valCols(k)
+      case d: Double  => lit(d)
+      case b: Boolean => lit(b)
+      case null       => lit(null)
+      case other => throw graft.OpenEoError("ProcessParameterInvalid",
         s"${n.processId}.$k: unsupported operand $other")
     }
-    def dataItems: Seq[Column] = resolved.getOrElse("data", Nil)
-      .asInstanceOf[Seq[Any]].zipWithIndex.map {
-        case (_: Cube, i)   => valCols(s"data#$i")
-        case (d: Double, _) => lit(d)
-        case (other, _) => throw new IllegalArgumentException(
-          s"${n.processId}.data: unsupported item $other")
-      }
-    val expr = scalarOpByName(n.processId, argCol, k => resolved.get(k).map(_ => argCol(k)),
-      dataItems)
+    def dataItems: Seq[Column] = resolved.get("data") match {
+      case Some(xs: Seq[_]) =>
+        xs.zipWithIndex.map { case (v, i) => operand(s"data#$i", v) }
+      case Some(other) => throw graft.OpenEoError("ProcessParameterInvalid",
+        s"${n.processId}.data: expected an array, got $other")
+      case None => Nil
+    }
+    val expr = scalarOp(n.processId,
+      k => resolved.get(k).map(operand(k, _)), dataItems)
+    if (cubes.isEmpty) return fold(expr)
     // float32-forcing in the reference (openeo_odc_driver.py:424 et al.);
     // we stay in double for oracle parity but force numeric on booleans
     val keep = Dim.All.filter(dims.contains).map(col)
     Cube(joined.select(keep :+ expr.as(Cube.ValueCol): _*), cubes.head._2.meta)
   }
 
-  /** Pure-scalar fold (all operands literal): the reference stores plain
-    * Python numbers in partialResults (openeo_odc_driver.py:387-388). */
-  private def scalarEval(processId: String, args: Map[String, Any]): Any = {
-    def d(k: String): Double = args(k).asInstanceOf[Double]
-    processId match {
-      case "add" => d("x") + d("y")
-      case "subtract" => d("x") - d("y")
-      case "multiply" => d("x") * d("y")
-      case "divide" =>
-        if (d("y") == 0.0) throw graft.OpenEoError.DivisionByZero
-        d("x") / d("y")
-      case "sqrt" => math.sqrt(d("x"))
-      case "absolute" => math.abs(d("x"))
-      case "ln" => math.log(d("x"))
-      case "power" => math.pow(d("base"), d("p"))
-      case "pi" => math.Pi
-      case "sum" => args("data").asInstanceOf[Seq[Any]]
-        .map(_.asInstanceOf[Double]).sum
-      case "product" => args("data").asInstanceOf[Seq[Any]]
-        .map(_.asInstanceOf[Double]).product
-      case other => throw new IllegalArgumentException(
-        s"unsupported process: $other")
-    }
-  }
+  /** The value of an all-literal Column: Catalyst analyzes and optimizes
+    * it over a one-row local relation, and the optimizer evaluates it on
+    * the driver (`ConvertToLocalRelation`), so no Spark job starts. The
+    * value is the one the cube path computes, in its type (a comparison
+    * stays Boolean). */
+  private[graft] def fold(c: Column): Any =
+    spark.createDataFrame(java.util.List.of(Row()),
+        org.apache.spark.sql.types.StructType(Nil))
+      .select(c).collect().head.get(0)
 
   // ----------------------------------------------- scan + resample folding
 
@@ -1275,17 +1264,20 @@ final class GraphCompiler(
       // subgraph feeding run_udf would otherwise silently drop the
       // upstream stages — that falls through to the typed unsupported
       // error below instead.
-      val src = result.arguments.get("udf") match {
-        case Some(LitArg(v)) if v.isTextual => v.asText
-        case other => throw new IllegalArgumentException(s"run_udf udf: $other")
-      }
       Reducers.reduceDimensionExpr(c, dim,
-        UdfCompiler.compileReduce(src, col(Cube.ValueCol)).cast("double"))
+        UdfCompiler.compileReduce(udfSource(result), col(Cube.ValueCol)).cast("double"))
     }
     else if (dim == Dim.Band) {
       // expression over band columns: compile against the wide view
       val wide = c.wide
-      val expr = compileBandExpr(cb, c.meta.bandOrder)
+      def band(e: Node): Column = col(e.arguments.get("label").collect {
+          case LitArg(v) if v.isTextual => v.asText
+        }.orElse(e.arguments.get("index").collect {
+          case LitArg(v) if v.isNumber => v.asInt
+        }.flatMap(c.meta.bandOrder.lift)).getOrElse(throw graft.OpenEoError(
+          "ProcessParameterInvalid", "array_element over bands needs a " +
+            s"label, or an index into the cube's bands ${c.meta.bandOrder}")))
+      val expr = callback(cb, Map.empty, band)
       val keys = c.dimsExcept(Dim.Band).map(col)
       Cube(wide.select(keys :+ expr.cast("double").as(Cube.ValueCol): _*),
         c.meta.copy(bandOrder = Nil))
@@ -1309,10 +1301,7 @@ final class GraphCompiler(
         // lag, rollmean, …) compiled over a per-group ordered window along
         // `dim` — the reference ships the series to an R pool instead
         // (openeo_odc_driver.py:282-339); here it stays a window projection
-        val src = result.arguments.get("udf") match {
-          case Some(LitArg(v)) if v.isTextual => v.asText
-          case other => throw new IllegalArgumentException(s"run_udf udf: $other")
-        }
+        val src = udfSource(result)
         // `runtime: "java"` (openEO run_udf's runtime argument) selects
         // the EXTERNAL escape hatch: opaque Java source compiled per
         // executor JVM by janino and run per series through the chunked
@@ -1391,163 +1380,6 @@ final class GraphCompiler(
     case _ => Nil
   }
 
-  /** Compile a scalar callback graph to a Column, binding from_parameter
-    * names (x, y, data, cube1, cube2...) to the given columns. Covers the
-    * element-wise process set M1-M15 (openeo_odc_driver.py:413-618). */
-  def compileScalar(g: ProcessGraph, params: Map[String, Column]): Column = {
-    val done = scala.collection.mutable.Map[String, Column]()
-    def arg(a: Arg): Column = a match {
-      case FromNode(id)       => done(id)
-      case FromParameter(p)   => params.getOrElse(p, throw new
-          IllegalArgumentException(s"unbound callback parameter: $p"))
-      case LitArg(v) if v.isNumber  => lit(v.asDouble)
-      case LitArg(v) if v.isBoolean => lit(v.asBoolean)
-      case LitArg(v) if v.isNull    => lit(null)
-      case other => throw new IllegalArgumentException(s"scalar arg: $other")
-    }
-    g.topoSorted.foreach { n =>
-      done(n.id) = scalarOp(n, arg)
-    }
-    done(g.resultNode.id)
-  }
-
-  /** One element-wise process → Column (shared by apply / overlap resolver
-    * / band-expression compilation / top-level apply-position ops). */
-  private def scalarOp(n: Node, arg: Arg => Column): Column =
-    if (n.processId == "run_udf") {
-      // run_udf inside a callback: compile the source over the bound value
-      val src = n.arguments.get("udf") match {
-        case Some(LitArg(v)) if v.isTextual => v.asText
-        case other => throw new IllegalArgumentException(s"run_udf udf: $other")
-      }
-      UdfCompiler.compile(src, arg(n.arguments("data")))
-    } else scalarOpByName(n.processId,
-      name => arg(n.arguments(name)),
-      name => n.arguments.get(name).map(arg),
-      n.arguments.get("data") match {
-        case Some(ArrayArg(xs)) => xs.map(arg)
-        case _ => Nil
-      })
-
-  private def scalarOpByName(processId: String, a: String => Column,
-      opt: String => Option[Column], dataItems: => Seq[Column]): Column = {
-    processId match {
-      case "add"      => a("x") + a("y")
-      case "subtract" => a("x") - a("y")
-      case "multiply" => a("x") * a("y")
-      case "divide"   => a("x") / a("y")
-      case "sum"      => dataItems.reduce(_ + _)
-      case "product"  => dataItems.reduce(_ * _)
-      case "lt"  => a("x") <  a("y")
-      case "lte" => a("x") <= a("y")
-      case "gt"  => a("x") >  a("y")
-      case "gte" => a("x") >= a("y")
-      case "eq"  => a("x") === a("y")
-      case "neq" => a("x") =!= a("y")
-      case "not" => !a("x")
-      case "and" => a("x") && a("y")
-      case "or"  => a("x") || a("y")
-      case "sqrt" => sqrt(a("x"))
-      case "power" => pow(a("base"), a("p"))
-      case "absolute" => abs(a("x"))
-      case "ln" => log(a("x")) // reference intent (np.ln bug, line 512)
-      case "log" => log(a("x")) / log(opt("base").getOrElse(lit(10.0)))
-      case "exp" => exp(a("x"))
-      case "sin" => sin(a("x"))
-      case "cos" => cos(a("x"))
-      case "pi" => lit(math.Pi)
-      case "normalized_difference" =>
-        (a("x") - a("y")) / (a("x") + a("y"))
-      case "clip" =>
-        greatest(opt("min").getOrElse(lit(0.0)),
-          least(opt("max").getOrElse(lit(Double.MaxValue)), a("x")))
-      case "linear_scale_range" =>
-        val iMin = a("inputMin"); val iMax = a("inputMax")
-        val oMin = opt("outputMin").getOrElse(lit(0.0))
-        val oMax = opt("outputMax").getOrElse(lit(1.0))
-        val clamped = greatest(iMin, least(iMax, a("x")))
-        (clamped - iMin) / (iMax - iMin) * (oMax - oMin) + oMin
-      case "if" =>
-        when(a("value"), a("accept"))
-          .otherwise(opt("reject").getOrElse(lit(null)))
-      case "is_nodata" | "is_nan" => a("x").isNull || isnan(a("x"))
-      case other => throw new IllegalArgumentException(
-        s"unsupported scalar process: $other")
-    }
-  }
-
-  /** Band-axis expression: array_element nodes select band columns of the
-    * wide pivot; everything else is scalarOp. */
-  private def compileBandExpr(g: ProcessGraph, bandOrder: Seq[String]): Column = {
-    val done = scala.collection.mutable.Map[String, Column]()
-    def arg(a: Arg): Column = a match {
-      case FromNode(id)      => done(id)
-      case FromParameter(_)  => throw new IllegalArgumentException(
-        "band expression: only array_element may consume the data parameter")
-      case LitArg(v) if v.isNumber  => lit(v.asDouble)
-      case LitArg(v) if v.isBoolean => lit(v.asBoolean)
-      case other => throw new IllegalArgumentException(s"band expr arg: $other")
-    }
-    g.topoSorted.foreach { n =>
-      done(n.id) = n.processId match {
-        case "array_element" =>
-          val label = n.arguments.get("label").collect {
-            case LitArg(v) if v.isTextual => v.asText }
-          val index = n.arguments.get("index").collect {
-            case LitArg(v) if v.isNumber => v.asInt }
-          val band = label.getOrElse {
-            require(bandOrder.nonEmpty, "positional array_element needs bandOrder")
-            bandOrder(index.get)
-          }
-          col(band)
-        case _ => scalarOp(n, arg)
-      }
-    }
-    done(g.resultNode.id)
-  }
-
-  /** fit/predict model callback → serializable ScalarExpr over
-    * (x, parameters) — replaces the reference's Python-source string
-    * codegen (openeo_odc_driver.py:228-278). */
-  def compileModel(g: ProcessGraph): ScalarExpr = {
-    import ScalarExpr._
-    val done = scala.collection.mutable.Map[String, ScalarExpr]()
-    def arg(a: Arg): ScalarExpr = a match {
-      case FromNode(id)          => done(id)
-      case FromParameter("x")    => X
-      case LitArg(v) if v.isNumber => Const(v.asDouble)
-      case other => throw new IllegalArgumentException(s"model arg: $other")
-    }
-    g.topoSorted.foreach { n =>
-      done(n.id) = n.processId match {
-        case "array_element" =>
-          // parameters array access → Param(i)
-          val idx = n.arguments.get("index").collect {
-            case LitArg(v) if v.isNumber => v.asInt }
-          Param(idx.getOrElse(0))
-        case "add"      => Add(arg(n.arguments("x")), arg(n.arguments("y")))
-        case "subtract" => Sub(arg(n.arguments("x")), arg(n.arguments("y")))
-        case "multiply" => Mul(arg(n.arguments("x")), arg(n.arguments("y")))
-        case "divide"   => Div(arg(n.arguments("x")), arg(n.arguments("y")))
-        case "power"    => Pow(arg(n.arguments("base")), arg(n.arguments("p")))
-        case "sum"      => n.arguments("data").asInstanceOf[ArrayArg]
-          .items.map(arg).reduce(Add(_, _))
-        case "product"  => n.arguments("data").asInstanceOf[ArrayArg]
-          .items.map(arg).reduce(Mul(_, _))
-        case "sin"      => Sin(arg(n.arguments("x")))
-        case "cos"      => Cos(arg(n.arguments("x")))
-        case "ln"       => Ln(arg(n.arguments("x")))
-        case "sqrt"     => Sqrt(arg(n.arguments("x")))
-        case "absolute" => Abs(arg(n.arguments("x")))
-        case "pi"       => Const(math.Pi)
-        case "multiply_pi_x" => Mul(Const(math.Pi), X)
-        case other => throw new IllegalArgumentException(
-          s"unsupported model process: $other")
-      }
-    }
-    done(g.resultNode.id)
-  }
-
   // --------------------------------------------------------------- geometries
 
   private def extentPair(a: Arg, results: collection.Map[String, Any]): (String, String) =
@@ -1580,5 +1412,130 @@ final class GraphCompiler(
     if (first.get(0).isArray && first.get(0).get(0).isArray)
       coords.elements().asScala.toSeq.map(poly => ring(poly.get(0)))  // multi
     else Seq(ring(first))  // single polygon, outer ring
+  }
+}
+
+object GraphCompiler {
+
+  /** The operands of one element-wise process, each already a Column: its
+    * named arguments and the items of its `data` array. */
+  final class Operands(processId: String, named: String => Option[Column],
+      items: => Seq[Column]) {
+    def opt(k: String): Option[Column] = named(k)
+    def apply(k: String): Column = named(k).getOrElse(missing(k))
+    def data: Seq[Column] = { val xs = items; if (xs.isEmpty) missing("data"); xs }
+    private def missing(k: String): Nothing = throw graft.OpenEoError(
+      "ProcessParameterMissing",
+      s"Process '$processId' needs the argument '$k'.")
+  }
+
+  /** The element-wise processes (M1-M15, openeo_odc_driver.py:383-618):
+    * the one table every position compiles them from — cube-level nodes,
+    * their all-literal fold, and every callback the walker compiles. */
+  val scalarOpByName: Map[String, Operands => Column] = Map(
+    "add"      -> (a => a("x") + a("y")),
+    "subtract" -> (a => a("x") - a("y")),
+    "multiply" -> (a => a("x") * a("y")),
+    "divide"   -> (a => a("x") / a("y")),
+    "sum"      -> (a => a.data.reduce(_ + _)),
+    "product"  -> (a => a.data.reduce(_ * _)),
+    "lt"  -> (a => a("x") <  a("y")),
+    "lte" -> (a => a("x") <= a("y")),
+    "gt"  -> (a => a("x") >  a("y")),
+    "gte" -> (a => a("x") >= a("y")),
+    "eq"  -> (a => a("x") === a("y")),
+    "neq" -> (a => a("x") =!= a("y")),
+    "not" -> (a => !a("x")),
+    "and" -> (a => a("x") && a("y")),
+    "or"  -> (a => a("x") || a("y")),
+    "sqrt"     -> (a => sqrt(a("x"))),
+    "power"    -> (a => pow(a("base"), a("p"))),
+    "absolute" -> (a => abs(a("x"))),
+    "ln"       -> (a => log(a("x"))), // reference intent (np.ln bug, line 512)
+    "log"      -> (a => log(a("x")) / log(a.opt("base").getOrElse(lit(10.0)))),
+    "exp" -> (a => exp(a("x"))),
+    "sin" -> (a => sin(a("x"))),
+    "cos" -> (a => cos(a("x"))),
+    "pi"  -> (_ => lit(math.Pi)),
+    "normalized_difference" -> (a => (a("x") - a("y")) / (a("x") + a("y"))),
+    "clip" -> (a => greatest(a.opt("min").getOrElse(lit(0.0)),
+      least(a.opt("max").getOrElse(lit(Double.MaxValue)), a("x")))),
+    "linear_scale_range" -> { a =>
+      val iMin = a("inputMin"); val iMax = a("inputMax")
+      val oMin = a.opt("outputMin").getOrElse(lit(0.0))
+      val oMax = a.opt("outputMax").getOrElse(lit(1.0))
+      val clamped = greatest(iMin, least(iMax, a("x")))
+      (clamped - iMin) / (iMax - iMin) * (oMax - oMin) + oMin
+    },
+    // the cast types a null literal condition (a no-op on a boolean)
+    "if" -> (a => when(a("value").cast("boolean"), a("accept"))
+      .otherwise(a.opt("reject").getOrElse(lit(null)))),
+    "is_nodata" -> (a => a("x").isNull || isnan(a("x"))),
+    "is_nan"    -> (a => a("x").isNull || isnan(a("x"))))
+
+  /** `processId` from [[scalarOpByName]] over the given operands. */
+  def scalarOp(processId: String, named: String => Option[Column],
+      data: => Seq[Column]): Column =
+    scalarOpByName.getOrElse(processId, throw unsupported(processId))(
+      new Operands(processId, named, data))
+
+  private def unsupported(processId: String): graft.OpenEoError =
+    graft.OpenEoError("ProcessUnsupported",
+      s"Process '$processId' is not supported in this position.")
+
+  /** The one callback walker: an element-wise callback graph → one Column
+    * from [[scalarOpByName]] (run_udf compiles its source over its data).
+    * Callers differ only in how leaves bind: `param` binds a
+    * from_parameter (apply's `x`, an overlap resolver's `x`/`y`, a model's
+    * `x`), `element` an array_element node (a band column, a model
+    * parameter). Numeric literals stay plain `Literal`s, so the physical
+    * plan can turn them into generated-code parameters. */
+  def callback(g: ProcessGraph, param: Map[String, Column],
+      element: Node => Column = e => throw unsupported(e.processId)): Column = {
+    val done = scala.collection.mutable.Map[String, Column]()
+    def arg(a: Arg): Column = a match {
+      case FromNode(id)     => done(id)
+      case FromParameter(p) => param.getOrElse(p, throw graft.OpenEoError(
+        "ProcessParameterInvalid", s"unbound callback parameter '$p'"))
+      case LitArg(v) if v.isNumber  => lit(v.asDouble)
+      case LitArg(v) if v.isBoolean => lit(v.asBoolean)
+      case LitArg(v) if v.isNull    => lit(null)
+      case other => throw graft.OpenEoError("ProcessParameterInvalid",
+        s"unsupported callback operand $other")
+    }
+    g.topoSorted.foreach { n =>
+      done(n.id) = n.processId match {
+        case "array_element" => element(n)
+        case "run_udf" =>
+          UdfCompiler.compile(udfSource(n), arg(n.arguments("data")))
+        case p => scalarOp(p, k => n.arguments.get(k).map(arg),
+          n.arguments.get("data") match {
+            case Some(ArrayArg(xs)) => xs.map(arg)
+            case _ => Nil
+          })
+      }
+    }
+    done(g.resultNode.id)
+  }
+
+  /** A fit_curve / predict_curve model callback over `x` (Unix seconds)
+    * and the `parameters` array — the walker, with `x` and each
+    * array_element bound by the caller, in place of the reference's
+    * Python-source codegen (openeo_odc_driver.py:228-278). It has one
+    * parameter more than its largest array_element index. */
+  def model(g: ProcessGraph): CurveFit.Model = {
+    def index(e: Node): Int = e.arguments.get("index").collect {
+      case LitArg(v) if v.isNumber && v.asInt >= 0 => v.asInt
+    }.getOrElse(throw graft.OpenEoError("ProcessParameterInvalid",
+      "a model's array_element needs a numeric index into its parameters"))
+    val indices = g.nodes.values.filter(_.processId == "array_element").map(index)
+    CurveFit.Model(indices.maxOption.fold(0)(_ + 1),
+      (x, p) => callback(g, Map("x" -> x), e => p(index(e))))
+  }
+
+  /** run_udf's `udf` argument: the UDF source text. */
+  private def udfSource(n: Node): String = n.arguments.get("udf") match {
+    case Some(LitArg(v)) if v.isTextual => v.asText
+    case other => throw new IllegalArgumentException(s"run_udf udf: $other")
   }
 }

@@ -40,11 +40,19 @@ object ProcessGraph {
   /** Most nodes a process graph may hold, callback nodes included. A
     * larger graph is refused at parse time with a typed openEO error
     * (a 400 from the server) before any work grows with its size; real
-    * graphs hold tens of nodes. The cap bounds the count, not the depth:
-    * composing a `from_node` chain is quadratic in its length (a
-    * 200-node chain took 12 s) and a 1,000-node chain still overflows
-    * Catalyst's stack. */
+    * graphs hold tens of nodes. The cap bounds the count; [[MaxDepth]]
+    * bounds the depth. */
   val MaxNodes: Int = 1000
+
+  /** Most nodes on one `from_node` path ([[ProcessGraph.depth]]). A
+    * deeper graph is refused at parse time like a larger one: each node of
+    * a chain composes over the whole plan below it, so composing costs the
+    * square of the depth, and past some depth Catalyst overflows its
+    * stack. Measured through `graft.api.Server` on a 4-core host (a chain
+    * of `absolute` over a 16-cell cube): 250 nodes answered in 2.0 s, 500
+    * in 5.9 s, and 600 ended in a StackOverflowError (a 500) after 6.3 s,
+    * 1,000 after 19 s. The bound keeps about half the overflowing depth. */
+  val MaxDepth: Int = 256
 
   def parse(json: String): ProcessGraph = {
     val root = new ObjectMapper().readTree(json)
@@ -55,6 +63,10 @@ object ProcessGraph {
     val n = g.size
     if (n > MaxNodes) throw graft.OpenEoError("ProcessGraphComplexity",
       s"The process graph has $n nodes; at most $MaxNodes are accepted.")
+    val d = g.depth
+    if (d > MaxDepth) throw graft.OpenEoError("ProcessGraphComplexity",
+      s"The process graph's longest from_node path has $d nodes; at most " +
+        s"$MaxDepth are accepted.")
     g
   }
 
@@ -87,6 +99,22 @@ final case class ProcessGraph(nodes: Map[String, ProcessGraph.Node]) {
     * graph (i.e. references escaping a sub-graph to the enclosing scope). */
   def externalDeps: Seq[String] =
     nodes.values.toSeq.flatMap(_.deps).distinct.filterNot(nodes.contains)
+
+  /** Nodes on the longest `from_node` path; a node counts its deepest
+    * callback's depth too. */
+  def depth: Int = {
+    def argDepth(a: Arg): Int = a match {
+      case SubGraph(g) => g.depth
+      case ArrayArg(xs) => xs.map(argDepth).maxOption.getOrElse(0)
+      case _ => 0
+    }
+    val d = scala.collection.mutable.Map[String, Int]()
+    topoSorted.foreach { n =>
+      d(n.id) = 1 + n.arguments.values.map(argDepth).maxOption.getOrElse(0) +
+        n.deps.flatMap(d.get).maxOption.getOrElse(0)
+    }
+    d.values.maxOption.getOrElse(0)
+  }
 
   /** Number of nodes, callback nodes included. */
   def size: Int = {

@@ -139,6 +139,121 @@ class GraphCompilerSpec extends SparkSpec {
     e.code shouldBe "MultiplicandMissing"
   }
 
+  test("all-literal top-level nodes fold through the element-wise table; " +
+      "unknown processes and bad operands raise typed errors") {
+    def one(p: String, args: String) = compiler.compile(
+      s"""{"n": {"process_id": "$p", "arguments": {$args}, "result": true}}""")
+    one("exp", """"x": 1""") shouldBe StrictMath.exp(1.0) // Spark's exp
+    one("gt", """"x": 3, "y": 2""") shouldBe true
+    one("clip", """"x": 5, "min": 0, "max": 1""") shouldBe 1.0
+    one("sum", """"data": [1, 2, 3.5]""") shouldBe 6.5
+    one("pi", "") shouldBe math.Pi
+    (the[graft.OpenEoError] thrownBy one("divide", """"x": 1, "y": 0""")
+      ).code shouldBe "DivisionByZero"
+    (the[graft.OpenEoError] thrownBy one("multiply", """"x": 2""")
+      ).code shouldBe "MultiplicandMissing"
+    (the[graft.OpenEoError] thrownBy one("frobnicate", """"x": 1""")
+      ).code shouldBe "ProcessUnsupported"
+    (the[graft.OpenEoError] thrownBy one("subtract", """"x": 1""")
+      ).code shouldBe "ProcessParameterMissing"
+    (the[graft.OpenEoError] thrownBy one("add", """"x": 1, "y": "two"""")
+      ).code shouldBe "ProcessParameterInvalid"
+    (the[graft.OpenEoError] thrownBy one("sum", """"data": [1, [2]]""")
+      ).code shouldBe "ProcessParameterInvalid"
+    def inApply(p: String) = compiler.compile(s"""{
+      "load": {"process_id": "load_collection", "arguments": {"id": "s2_l2a"}},
+      "ap": {"process_id": "apply", "arguments": {"data": {"from_node": "load"},
+        "process": {"process_graph": {"f": {"process_id": "$p",
+          "arguments": {"x": {"from_parameter": "x"}}, "result": true}}}},
+        "result": true}}""")
+    (the[graft.OpenEoError] thrownBy inApply("frobnicate")
+      ).code shouldBe "ProcessUnsupported"
+    inApply("exp").asInstanceOf[Cube].df.count() shouldBe 24
+  }
+
+  /** A collection with a year of samples: 24 scenes 15 days apart, one
+    * band, two pixels, a seasonal signal plus noise. */
+  lazy val seasonDir: String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-season").toString
+    val rows = for { i <- 0 until 24; x <- 0 to 1 } yield {
+      val t = 1.64e9 + i * 15 * 86400.0
+      val w = 2 * math.Pi / 31557600.0 * t
+      (new java.sql.Timestamp((t * 1000).toLong), "B04", 0.0, x.toDouble,
+        300.0 + 40 * x + 80 * math.cos(w) - 50 * math.sin(w) +
+          5 * math.sin(3.0 * i + x))
+    }
+    rows.toDF("time", "band", "y", "x", "value")
+      .write.mode("overwrite").parquet(s"$dir/season")
+    dir
+  }
+
+  test("fit_curve -> predict_curve through the graph: params equal a direct " +
+      "fitCurve, predictions equal the model in plain Scala") {
+    val season = new GraphCompiler(spark, Map("season" -> Scan.CollectionSpec(
+      s"$seasonDir/season", crs = Some("EPSG:32632"), bandOrder = Seq("B04"),
+      grid = Some(GridRef(0, 0, 1, 1)))),
+      java.nio.file.Files.createTempDirectory("graft-res").toString)
+    val param = (i: Int) => s""""a$i": {"process_id": "array_element",
+      "arguments": {"data": {"from_parameter": "parameters"}, "index": $i}}"""
+    // a0 + a1·cos(2πx/year) + a2·sin(2πx/year), with the pi process
+    val harmonic = Seq(param(0), param(1), param(2),
+      """"pi": {"process_id": "pi", "arguments": {}}""",
+      """"tp": {"process_id": "multiply", "arguments": {"x": 2, "y": {"from_node": "pi"}}}""",
+      """"om": {"process_id": "divide", "arguments": {"x": {"from_node": "tp"}, "y": 31557600}}""",
+      """"w": {"process_id": "multiply", "arguments": {"x": {"from_node": "om"}, "y": {"from_parameter": "x"}}}""",
+      """"c": {"process_id": "cos", "arguments": {"x": {"from_node": "w"}}}""",
+      """"s": {"process_id": "sin", "arguments": {"x": {"from_node": "w"}}}""",
+      """"t1": {"process_id": "multiply", "arguments": {"x": {"from_node": "a1"}, "y": {"from_node": "c"}}}""",
+      """"t2": {"process_id": "multiply", "arguments": {"x": {"from_node": "a2"}, "y": {"from_node": "s"}}}""",
+      """"m": {"process_id": "sum", "arguments": {"data": [{"from_node": "a0"}, {"from_node": "t1"}, {"from_node": "t2"}]}, "result": true}""")
+    // a0 + a1·exp(cos(2πx/year)): exp, which the models did not support
+    val expModel = Seq(param(0), param(1),
+      """"w": {"process_id": "multiply", "arguments": {"x": 1.9909865927683788E-7, "y": {"from_parameter": "x"}}}""",
+      """"c": {"process_id": "cos", "arguments": {"x": {"from_node": "w"}}}""",
+      """"e": {"process_id": "exp", "arguments": {"x": {"from_node": "c"}}}""",
+      """"t": {"process_id": "multiply", "arguments": {"x": {"from_node": "a1"}, "y": {"from_node": "e"}}}""",
+      """"m": {"process_id": "add", "arguments": {"x": {"from_node": "a0"}, "y": {"from_node": "t"}}, "result": true}""")
+    val omega = 2 * math.Pi / 31557600.0
+    val cases = Seq[(Seq[String], Int, (Double, Seq[Double]) => Double)](
+      (harmonic, 3, (x, p) => p(0) + p(1) * math.cos(omega * x) + p(2) * math.sin(omega * x)),
+      (expModel, 2, (x, p) => p(0) + p(1) * StrictMath.exp(math.cos(1.9909865927683788E-7 * x))))
+    for ((nodes, nParams, plain) <- cases) {
+      val fn = nodes.mkString("""{"process_graph": {""", ",", "}}")
+      val load = """"load": {"process_id": "load_collection", "arguments": {"id": "season"}}"""
+      def fit(result: Boolean) = s""""fit": {"process_id": "fit_curve", "arguments": {
+        "data": {"from_node": "load"}, "dimension": "t", "function": $fn,
+        "parameters": ${Seq.fill(nParams)(1).mkString("[", ",", "]")}}, "result": $result}"""
+      val fitted = season.compile(s"{$load, ${fit(true)}}")
+        .asInstanceOf[org.apache.spark.sql.DataFrame]
+      val predicted = season.compile(s"""{$load, ${fit(false)},
+        "pred": {"process_id": "predict_curve", "arguments": {"data": {"from_node": "load"},
+          "parameters": {"from_node": "fit"}, "dimension": "t", "function": $fn},
+          "result": true}}""").asInstanceOf[Cube]
+      val model = GraphCompiler.model(ProcessGraph.parse(nodes.mkString("{", ",", "}")))
+      model.nParams shouldBe nParams
+      val cube = season.compile(
+        """{"l": {"process_id": "load_collection", "arguments": {"id": "season"}, "result": true}}""")
+        .asInstanceOf[Cube]
+      val direct = graft.functions.CurveFit.fitCurve(cube, model)
+      def params(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => r.getAs[Double](Dim.X) -> r.getSeq[Double](r.fieldIndex("params"))).toMap
+      val p = params(fitted)
+      p.keySet shouldBe Set(0.0, 1.0)
+      p.foreach { case (x, ps) =>
+        ps.size shouldBe nParams
+        ps.zip(params(direct)(x)).foreach { case (a, b) => a shouldBe b +- 1e-9 }
+      }
+      val pred = predicted.df
+        .select(unix_timestamp(col(Dim.Time)).cast("double"), col(Dim.X), col("value"))
+        .collect()
+      pred.length shouldBe 48
+      pred.foreach { r =>
+        r.getDouble(2) shouldBe plain(r.getDouble(0), p(r.getDouble(1))) +- 1e-9
+      }
+    }
+  }
+
   test("merge_cubes with overlap resolver subgraph") {
     val g = """{
       "load": {"process_id": "load_collection", "arguments": {"id": "s2_l2a"}},

@@ -74,19 +74,47 @@ class ProcessGraphSpec extends AnyFunSuite with Matchers {
       a.drop(1).toInt + 1 == b.drop(1).toInt } shouldBe true
   }
 
+  /** `n` nodes: a load, then `absolute`s each reading the load
+    * (`fan`, depth 2) or the node before (`chain`, depth n). */
+  private def graph(n: Int, fan: Boolean) = (1 until n).map(i =>
+    s""""n$i":{"process_id":"absolute","arguments":{"x":{"from_node":"n${if (fan) 0 else i - 1}"}}""" +
+      (if (i == n - 1) ""","result":true}""" else "}"))
+    .mkString("""{"n0":{"process_id":"load_collection","arguments":{"id":"c1"}},""", ",", "}")
+
   test("parse refuses a graph over the node cap with a typed error, callbacks counted") {
-    def chain(n: Int) = (1 until n).map(i =>
-      s""""n$i":{"process_id":"absolute","arguments":{"x":{"from_node":"n${i - 1}"}}""" +
-        (if (i == n - 1) ""","result":true}""" else "}"))
-      .mkString("""{"n0":{"process_id":"load_collection","arguments":{"id":"c1"}},""", ",", "}")
-    ProcessGraph.parse(chain(ProcessGraph.MaxNodes)).size shouldBe ProcessGraph.MaxNodes
-    val e = intercept[OpenEoError](ProcessGraph.parse(chain(ProcessGraph.MaxNodes + 1)))
+    // a fan, not a chain: a chain this long is over the depth bound
+    ProcessGraph.parse(graph(ProcessGraph.MaxNodes, fan = true)).size shouldBe ProcessGraph.MaxNodes
+    val e = intercept[OpenEoError](ProcessGraph.parse(graph(ProcessGraph.MaxNodes + 1, fan = true)))
     e.code shouldBe "ProcessGraphComplexity"
+    e.msg should include(s"at most ${ProcessGraph.MaxNodes}")
     // one top-level node whose callback holds the rest
     val cb = (0 until ProcessGraph.MaxNodes).map(i =>
       s""""c$i":{"process_id":"absolute","arguments":{"x":{"from_parameter":"x"}}}""")
       .mkString("{", ",", "}")
     val nested = s"""{"ap":{"process_id":"apply","arguments":{"process":{"process_graph":$cb}},"result":true}}"""
     intercept[OpenEoError](ProcessGraph.parse(nested)).code shouldBe "ProcessGraphComplexity"
+  }
+
+  test("parse refuses a from_node path over the depth bound, callbacks counted") {
+    val max = ProcessGraph.MaxDepth
+    ProcessGraph.parse(graph(max, fan = true)).depth shouldBe 2
+    ProcessGraph.parse(graph(max, fan = false)).depth shouldBe max
+    val e = intercept[OpenEoError](ProcessGraph.parse(graph(max + 1, fan = false)))
+    e.code shouldBe "ProcessGraphComplexity"
+    e.msg should include(s"has ${max + 1} nodes; at most $max")
+    // a load, then an apply whose callback is a chain of `max - 1` nodes
+    def applied(k: Int) = {
+      val cb = (0 until k).map(i =>
+        s""""c$i":{"process_id":"absolute","arguments":{"x":""" +
+          (if (i == 0) """{"from_parameter":"x"}""" else s"""{"from_node":"c${i - 1}"}""") +
+          (if (i == k - 1) "},\"result\":true}" else "}}"))
+        .mkString("{", ",", "}")
+      s"""{"l":{"process_id":"load_collection","arguments":{"id":"c1"}},""" +
+        s""""ap":{"process_id":"apply","arguments":{"data":{"from_node":"l"},""" +
+        s""""process":{"process_graph":$cb}},"result":true}}"""
+    }
+    ProcessGraph.parse(applied(max - 2)).depth shouldBe max
+    intercept[OpenEoError](ProcessGraph.parse(applied(max - 1))).code shouldBe
+      "ProcessGraphComplexity"
   }
 }

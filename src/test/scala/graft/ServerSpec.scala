@@ -260,24 +260,61 @@ class ServerSpec extends SparkSpec {
     jobsOf(md5(graph(""))) shouldBe solo
   }
 
+  /** A linear from_node chain of `n` nodes: a load, then `absolute`s. */
+  def chain(n: Int): String = (1 until n).map(i =>
+    s""""n$i":{"process_id":"absolute","arguments":{"x":{"from_node":"n${i - 1}"}}""" +
+      (if (i == n - 1) ""","result":true}""" else "}"))
+    .mkString("""{"n0":{"process_id":"load_collection","arguments":{"id":"c1"}},""", ",", "}")
+
+  /** POST /graph, failing if the reply takes longer than 30 s. */
+  def post30(graph: String): HttpResponse[String] = HttpClient.newHttpClient().send(
+    HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${server.boundPort}/graph"))
+      .timeout(java.time.Duration.ofSeconds(30))
+      .POST(HttpRequest.BodyPublishers.ofString(graph)).build(),
+    HttpResponse.BodyHandlers.ofString())
+
   test("a graph that overflows the stack still gets a reply") {
     // a 100,000-node linear from_node chain: composing it would overflow
     // Catalyst's stack or run for minutes, so the node cap refuses it at
     // parse time
-    val n = 100000
-    val graph = (1 until n).map(i =>
-      s""""n$i":{"process_id":"absolute","arguments":{"x":{"from_node":"n${i - 1}"}}""" +
-        (if (i == n - 1) ""","result":true}""" else "}"))
-      .mkString("""{"n0":{"process_id":"load_collection","arguments":{"id":"c1"}},""", ",", "}")
-    val res = HttpClient.newHttpClient().send(
-      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${server.boundPort}/graph"))
-        .timeout(java.time.Duration.ofSeconds(30))
-        .POST(HttpRequest.BodyPublishers.ofString(graph)).build(),
-      HttpResponse.BodyHandlers.ofString())
+    val res = post30(chain(100000))
     res.statusCode() shouldBe 400
     val body = new com.fasterxml.jackson.databind.ObjectMapper().readTree(res.body())
     body.get("code").asText shouldBe "ProcessGraphComplexity"
     body.get("message").asText should include(graft.graph.ProcessGraph.MaxNodes.toString)
+  }
+
+  test("a from_node chain deeper than MaxDepth gets a 400; one at the " +
+      "bound gets a result") {
+    val max = graft.graph.ProcessGraph.MaxDepth
+    // 1,000 nodes pass the node cap; composing the chain ended in a
+    // StackOverflowError after 19 s
+    val deep = post30(chain(1000))
+    deep.statusCode() shouldBe 400
+    val body = new com.fasterxml.jackson.databind.ObjectMapper().readTree(deep.body())
+    body.get("code").asText shouldBe "ProcessGraphComplexity"
+    body.get("message").asText should include(s"at most $max")
+    val atBound = post30(chain(max))
+    withClue(atBound.body()) { atBound.statusCode() shouldBe 200 }
+  }
+
+  test("POST /graph folds an all-literal graph through the process table; " +
+      "an unknown process is a typed 400") {
+    def one(p: String, args: String) = http("POST", "/graph",
+      s"""{"n": {"process_id": "$p", "arguments": {$args}, "result": true}}""")
+    for ((p, args, want) <- Seq(
+        ("exp", """"x": 1""", StrictMath.exp(1.0).toString), // Spark's exp
+        ("gt", """"x": 3, "y": 2""", "true"),
+        ("clip", """"x": 5, "min": 0, "max": 1""", "1.0"))) {
+      val (code, body) = one(p, args)
+      withClue(s"$p: $body") { code shouldBe 200 }
+      val out = body.split("\"output\":\"")(1).split("\"")(0)
+      java.nio.file.Files.readString(java.nio.file.Paths.get(out)) shouldBe want
+    }
+    val (code, body) = one("frobnicate", """"x": 1""")
+    code shouldBe 400
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+      .get("code").asText shouldBe "ProcessUnsupported"
   }
 
   test("a request body over the bound gets a 413 JSON reply") {
