@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 
-/** Session-build registration of every graft native SQL function — the
-  * cluster-deployment surface:
+/** The one way graft extends a session: at session build. Every entry
+  * point builds its session through [[GraftSession.tuned]], which applies
+  * this; a cluster deployment names it in the Spark conf:
   *
   * {{{
   * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
@@ -13,19 +14,21 @@ import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
   * SparkSession.builder().withExtensions(new GraftExtensions) ...
   * }}}
   *
-  * After which `spark.sql("SELECT graft_dot(a, b) ...")`,
-  * `graft_simhash_text`, `graft_minhash_text`, `graft_bloom_agg`, … are
-  * plain SQL — the whole native-Expression tier becomes usable from a
-  * pure-SQL client (JDBC/Thrift, notebooks) with no Scala imports.
+  * It registers the graft_* SQL function names, the snapshot table-valued
+  * functions, the as-of join strategy, the band-join rule, the SQL DML
+  * rule and the literal parameterization. Nothing else writes into a
+  * session: a session built without it has none of these. After it,
+  * `spark.sql("SELECT graft_dot(a, b) ...")`, `graft_simhash_text`,
+  * `graft_minhash_text`, `graft_bloom_agg`, … are plain SQL, usable from
+  * a pure-SQL client (JDBC/Thrift, notebooks) with no Scala imports.
   *
-  * The payloads are the SAME (identifier, info, builder) triples the
-  * Column API registers lazily on first use ([[graft.functions]]), so
-  * SQL-surface and Column-surface calls resolve to the identical
-  * Catalyst expressions — same codegen, same semantics, one
-  * implementation. This mirrors how the reference exposes one process
-  * registry over HTTP (`/root/reference/openeo_odc_driver/
-  * openeo_odc_driver.py` process dispatch): one table of named
-  * operations, multiple front doors. */
+  * The Column API ([[graft.functions]]) needs no registration: each of
+  * its functions builds its Catalyst expression directly, so it works on
+  * any session. The SQL builders here build the same expressions (the
+  * ExtensionsSpec law), so both front doors share one implementation.
+  * This mirrors how the reference exposes one process registry
+  * (`openeo_odc_driver.py`'s process dispatch): one table of named
+  * operations behind its front door. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functionInjections.foreach(ext.injectFunction)
@@ -68,39 +71,4 @@ object GraftExtensions {
       functions.ZOrder.injectables ++
       functions.UnicodeExprs.injectables ++
       functions.IvfExprs.injectables
-
-  /** Register everything on a LIVE session (the extensions path only
-    * applies at session build): the functions, the table-valued
-    * functions, the as-of join strategy and the band-join rule.
-    * Idempotent. The SQL DML rule and the literal parameterization have
-    * no live-session hook: only a session built with these extensions
-    * has them. */
-  def registerAll(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    functionInjections.foreach { case (id, info, builder) =>
-      if (!registry.functionExists(id))
-        registry.registerFunction(id, info, builder)
-    }
-    val tvfRegistry = spark.sessionState.tableFunctionRegistry
-    functions.SnapshotTableFunctions.injectables.foreach {
-      case (id, info, builder) =>
-        if (!tvfRegistry.functionExists(id))
-          tvfRegistry.registerFunction(id, info, builder)
-    }
-    // the planner's strategy list holds both the extension-injected and
-    // the experimental strategies: a session built with these extensions
-    // already plans (and optimizes) with both, and is left alone
-    if (!spark.sessionState.planner.strategies
-        .exists(_ eq plans.AsofJoinStrategy)) {
-      spark.experimental.extraStrategies :+= plans.AsofJoinStrategy
-      if (!spark.experimental.extraOptimizations.contains(plans.BandJoinRule))
-        spark.experimental.extraOptimizations :+= plans.BandJoinRule
-    }
-  }
-
-  /** The Column API's registration: every graft_* Column function calls
-    * this before `call_function`, so the functions resolve on any active
-    * session, built with these extensions or not. */
-  private[graft] def registerActive(): Unit =
-    SparkSession.getActiveSession.foreach(registerAll)
 }

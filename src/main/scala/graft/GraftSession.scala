@@ -39,8 +39,12 @@ object GraftSession {
     *    so an embedder must build its session through this method before
     *    its first `file:` access; an instance cached earlier keeps
     *    forking for the life of the JVM.
-    *  - [[GraftExtensions]]: registers every graft_* function at session
-    *    build (the cluster-deployment path).
+    *  - [[GraftExtensions]]: the one way graft extends a session. An
+    *    embedder's session must be built through this method (or name
+    *    the extensions in its conf) to get the graft_* SQL names, as-of
+    *    joins ([[graft.ops.TableJoins.asofJoinNative]]) and the band-join
+    *    rule; nothing registers them on a live session. The Column API
+    *    ([[graft.functions]]) works on any session.
     */
   def tuned(b: SparkSession.Builder): SparkSession.Builder = b
     .config(graft.io.LocalFs.Confs)

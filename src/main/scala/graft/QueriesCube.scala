@@ -33,13 +33,14 @@ private[graft] object QueriesCube {
     "q_filter_bands" -> onCube(c =>
       Filters.filterBands(c, Seq("click", "purchase")).df),
     "q_filter_bbox" -> onCube(c =>
-      Filters.filterBbox(c, west = 1.0, south = 0.0, east = 2.0, north = 2.0).df),
+      Filters.filterBboxRef(c, west = 1.0, south = 0.0, east = 2.0, north = 2.0,
+        graft.ops.EpsgRef(4326)).df),
     "q_array_element" -> onCube(c =>
       Filters.arrayElement(c, Some("purchase"), None).df),
     "q_filter_spatial" -> onCube(c =>
       // triangle polygon in cube coordinates (no CRS → no reprojection)
-      Filters.filterSpatial(c,
-        Seq(Seq((0.5, -0.5), (3.5, -0.5), (3.5, 2.5))), ringsEpsg = 4326).df),
+      Filters.filterSpatialRef(c,
+        Seq(Seq((0.5, -0.5), (3.5, -0.5), (3.5, 2.5))), graft.ops.EpsgRef(4326)).df),
     // --- mask (F6/J4) ---------------------------------------------------
     "q_mask" -> onCube { c =>
       val m = Cube(
@@ -556,7 +557,7 @@ private[graft] object QueriesCube {
       Scan.loadCollection(s, Scan.CollectionSpec(tmp,
           bandOrder = Seq("click", "error", "purchase", "signup", "view"),
           grid = Some(GridRef(0, 0, 1, 1))),
-        bbox = Some((0.5, 4.5, 2.5, 20.5)), bboxEpsg = 0).df
+        bbox = Some((0.5, 4.5, 2.5, 20.5)), extentCrs = graft.ops.EpsgRef(0)).df
     }),
     "q_aggregate_temporal" -> ((s, dir) => {
       // openEO-core aggregate_temporal over arbitrary OVERLAPPING
@@ -703,7 +704,7 @@ private[graft] object QueriesCube {
       "SELECT time, y, x, value FROM cube WHERE band = 'purchase'"),
     "q_filter_spatial" ->
       // same triangle, same even-odd ray casting: y-straddle + x < x-at-y,
-      // bbox prefilter mirrors Filters.filterSpatial
+      // bbox prefilter mirrors Filters.filterSpatialRef
       cq("""SELECT * FROM cube
             WHERE x BETWEEN 0.5 AND 3.5 AND y BETWEEN -0.5 AND 2.5
             AND (( (CASE WHEN ((-0.5 > y) != (-0.5 > y)) THEN 0 ELSE 0 END)

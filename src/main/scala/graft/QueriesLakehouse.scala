@@ -1091,7 +1091,6 @@ private[graft] object QueriesLakehouse {
       // injected BandJoinRule optimizer rule rewrites it to the binned
       // equi-join (BandJoinRuleSpec pins the plan); oracle shared
       // verbatim with q_range_join
-      graft.GraftExtensions.registerAll(s)
       val ev = readEvents(s, dir)
       val busy = ev.where(col("event_type").isin("click", "view"))
         .groupBy(date_trunc("hour", col("ts")).as("window_start"))

@@ -1515,13 +1515,11 @@ private[graft] object QueriesText {
       graft.text.LanguageModel.scoreBackoffLm(d, lm, "text", "doc_id")
     }),
     "q_sql_surface" -> ((s, dir) => {
-      // the pure-SQL front door: GraftExtensions registers every native
-      // graft_* expression in the session FunctionRegistry (the same
-      // payloads spark.sql.extensions=graft.GraftExtensions injects at
-      // session build), and the query is driven ENTIRELY through SQL
-      // text — no Column API. Resolves to the identical codegen
-      // expressions, which the oracle's FNV-1a/ordered-sum replays prove.
-      graft.GraftExtensions.registerAll(s)
+      // the pure-SQL front door: the session's GraftExtensions injected
+      // every native graft_* expression into its FunctionRegistry at
+      // build, and the query is driven ENTIRELY through SQL text — no
+      // Column API. Resolves to the identical codegen expressions, which
+      // the oracle's FNV-1a/ordered-sum replays prove.
       s.read.parquet(s"$dir/documents.parquet")
         .createOrReplaceTempView("documents_sql")
       s.read.parquet(s"$dir/embeddings.parquet")

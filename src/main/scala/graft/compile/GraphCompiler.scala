@@ -188,8 +188,8 @@ final class GraphCompiler(
           east = e.get("east").asDouble, north = e.get("north").asDouble,
           bboxCrs = bboxCrs)
       case "filter_spatial" =>
-        Filters.filterSpatial(cubeArg(n, "data", r),
-          geoJsonRings(n.arguments("geometries")))
+        Filters.filterSpatialRef(cubeArg(n, "data", r),
+          geoJsonRings(n.arguments("geometries")), graft.ops.EpsgRef(4326))
       case "array_element" =>
         // top-level use (band selection); in-callback use is handled by
         // the expression compiler below
@@ -1128,7 +1128,7 @@ final class GraphCompiler(
       case _ => (None, None, graft.ops.EpsgRef(4326))
     }
     val scanned = Scan.loadCollection(spark, spec, bands, temporal, bbox,
-      polygon = polygon, extentCrs = Some(extRef))
+      polygon = polygon, extentCrs = extRef)
     // the fold must REGRID THE DATA, not just rewrite grid metadata — the
     // reference's ODC load really resamples (load_odc_collection.py:128-173)
     resample.map(applyResampleFold(scanned, _, results)).getOrElse(scanned)
@@ -1238,10 +1238,17 @@ final class GraphCompiler(
     }
 
   /** A callback that is a single named reducer over its `data` parameter
-    * (the aggregate_* convention — openeo_odc_driver.py:535, 723, 780). */
+    * (the aggregate_* convention — openeo_odc_driver.py:535, 723, 780).
+    * Any other shape is unsupported: reading only the result node would
+    * drop every other node of the callback. */
   def callbackReducerName(g: ProcessGraph): String = {
     val node = g.resultNode
-    node.processId
+    node.arguments.get("data") match {
+      case Some(FromParameter(_)) if g.nodes.size == 1 => node.processId
+      case _ => throw graft.OpenEoError("ProcessUnsupported",
+        s"Process '${node.processId}' is supported as a reducer only as " +
+          "the single node of its callback, over the callback's data.")
+    }
   }
 
   /** reduce_dimension: a named-reducer callback reduces with groupBy; an

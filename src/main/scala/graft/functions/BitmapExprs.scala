@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge.{column, expression}
 import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, LongType}
 
 /** EXACT mergeable distinct-count sketches — compressed integer
@@ -542,38 +542,26 @@ object BitmapExprs {
       (cs: Seq[Expression]) => BitmapAndNot(cs(0), cs(1))))
 
   /** Aggregate LONG values into an exact distinct-set sketch. */
-  def bitmapAgg(value: Column): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_bitmap_agg", value)
-  }
+  def bitmapAgg(value: Column): Column =
+    column(BitmapAggregate(expression(value)).toAggregateExpression())
 
   /** Union pre-built sketches (the rollup face). */
-  def bitmapUnionAgg(sketch: Column): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_bitmap_union_agg", sketch)
-  }
+  def bitmapUnionAgg(sketch: Column): Column =
+    column(BitmapUnionAggregate(expression(sketch)).toAggregateExpression())
 
   /** Exact distinct count of a sketch. */
-  def bitmapCount(sketch: Column): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_bitmap_count", sketch)
-  }
+  def bitmapCount(sketch: Column): Column =
+    column(BitmapCount(expression(sketch)))
 
   /** Merge two sketches row-wise. */
-  def bitmapOr(a: Column, b: Column): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_bitmap_or", a, b)
-  }
+  def bitmapOr(a: Column, b: Column): Column =
+    column(BitmapOr(expression(a), expression(b)))
 
   /** Intersection (retention). */
-  def bitmapAnd(a: Column, b: Column): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_bitmap_and", a, b)
-  }
+  def bitmapAnd(a: Column, b: Column): Column =
+    column(BitmapAnd(expression(a), expression(b)))
 
   /** Difference (churn). */
-  def bitmapAndNot(a: Column, b: Column): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_bitmap_andnot", a, b)
-  }
+  def bitmapAndNot(a: Column, b: Column): Column =
+    column(BitmapAndNot(expression(a), expression(b)))
 }

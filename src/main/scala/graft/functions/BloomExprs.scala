@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Alias, BloomFilterMightContain, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge.{column, expression}
 
 /** Column access to Spark's own Bloom-filter expressions
   * (`BloomFilterAggregate` / `BloomFilterMightContain` — the machinery
@@ -34,54 +34,25 @@ object BloomExprs {
       (cs: Seq[Expression]) => BloomFilterMightContain(cs(0), cs(1))))
 
   /** Aggregate LONG keys into a Bloom filter (binary sketch). */
-  def bloomAgg(value: Column, estimatedItems: Long, numBits: Long): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_bloom_agg", value,
-      lit(estimatedItems), lit(numBits))
-  }
+  def bloomAgg(value: Column, estimatedItems: Long, numBits: Long): Column =
+    column(new BloomFilterAggregate(expression(value),
+      Literal(estimatedItems), Literal(numBits)).toAggregateExpression())
 
   /** Membership probe; `bloom` must be a constant (binary literal). A
     * non-constant sketch is rejected HERE with a typed graft error —
     * Spark's own check only fires at analysis time, far from the call
-    * site and with an opaque message. */
+    * site and with an opaque message. The check is structural and needs
+    * no session: with aliases stripped, the expression must be foldable,
+    * which accepts lit(bytes) under foldable wrappers (cast, alias) and
+    * rejects attribute references. */
   def mightContain(bloom: Column, value: Column): Column = {
-    graft.GraftExtensions.registerActive()
-    // structural check: analyze the column against a one-row relation and
-    // ask the resolved Catalyst expression for foldability — accepts
-    // lit(bytes) and anything Spark would constant-fold over it
-    // (cast/alias), survives internal package renames, and rejects
-    // attribute references (they fail resolution against the dummy
-    // relation or resolve non-foldable). Driver-side, one tiny analyzer
-    // pass, on a path called once per probe construction.
-    val session = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession)
-    val constant = session match {
-      case Some(s) =>
-        // only AnalysisException means "not a constant" (attribute refs
-        // fail resolution against the dummy relation); any other failure
-        // is environmental and must surface, not masquerade as
-        // BloomNotConstant with a misleading message
-        try {
-          s.range(1).select(bloom.as("b"))
-            .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-            .queryExecution.analyzed.expressions.collectFirst {
-              case a: org.apache.spark.sql.catalyst.expressions.Alias =>
-                a.child.foldable
-            }.getOrElse(false)
-        } catch {
-          case _: org.apache.spark.sql.AnalysisException => false
-        }
-      // no session yet (column built before any Spark work): accept a
-      // raw literal node; wrapped constants need the analyzer to judge
-      case None =>
-        bloom.node.getClass.getName ==
-          "org.apache.spark.sql.internal.Literal"
-    }
+    val constant = org.apache.spark.sql.graft.Bridge.converted(bloom)
+      .transformUp { case a: Alias => a.child }.foldable
     if (!constant)
       throw graft.OpenEoError("BloomNotConstant",
         "mightContain needs a constant bloom sketch: collect the " +
           "aggregated sketch bytes and pass lit(bytes) (see " +
           "Dedup.decontaminateBloom)")
-    call_function("graft_might_contain", bloom, value)
+    column(BloomFilterMightContain(expression(bloom), expression(value)))
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.Bridge.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Native codegen dot product over two numeric arrays, summing
@@ -90,9 +90,7 @@ object DotProduct {
         DotProduct(children.head, children(1))
       }))
 
-  /** Codegen dot product column; registers the function on first use. */
-  def dot(a: Column, b: Column): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function(name, a, b)
-  }
+  /** Codegen dot product column. */
+  def dot(a: Column, b: Column): Column =
+    column(DotProduct(expression(a), expression(b)))
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{
   BinaryExpression, Expression, ExpressionInfo, GenericInternalRow, Literal,
   UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.functions.{call_function, lit, struct}
+import org.apache.spark.sql.graft.Bridge.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Native per-row geometry expressions: coordinate reprojection and the
@@ -76,11 +76,9 @@ object GeoExprs {
   /** [[PointInPolygons]] as a Column (null when x or y is null); no SQL
     * function name is registered for it. */
   def containing(x: Column, y: Column,
-      polygons: graft.ops.Geo.Polygons): Column = {
-    import org.apache.spark.sql.graft.Bridge
-    Bridge.column(PointInPolygons(Bridge.expression(x.cast("double")),
-      Bridge.expression(y.cast("double")), polygons))
-  }
+      polygons: graft.ops.Geo.Polygons): Column =
+    column(PointInPolygons(expression(x.cast("double")),
+      expression(y.cast("double")), polygons))
 
   private def intLit(e: Expression, what: String): Int = e match {
     case Literal(v: Int, IntegerType) => v
@@ -98,9 +96,7 @@ object GeoExprs {
         intLit(cs(3), "graft_reproject toEpsg"))))
 
   /** `reproject(x, y)` → struct(x, y) in the target CRS. */
-  def reproject(x: Column, y: Column, fromEpsg: Int, toEpsg: Int): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_reproject", x.cast("double"), y.cast("double"),
-      lit(fromEpsg), lit(toEpsg))
-  }
+  def reproject(x: Column, y: Column, fromEpsg: Int, toEpsg: Int): Column =
+    column(ReprojectPoint(expression(x.cast("double")),
+      expression(y.cast("double")), fromEpsg, toEpsg))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{array, call_function, lit}
+import org.apache.spark.sql.graft.Bridge.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Native expressions for the IVF index-build hot path. */
@@ -116,11 +116,11 @@ object IvfExprs {
       copy(child = c)
   }
 
-  // ---- registry plumbing (the TextHashExprs pattern): the structure
-  // rides into the builder as FOLDABLE literal args and is decoded ONCE
-  // at build time — the resulting expression carries plain Scala arrays
-  // and a single vector child, so per-row eval never touches Catalyst
-  // literals.
+  // ---- SQL surface: `graft_ivf_assign2(vec, centers, child_ids,
+  // child_centroids, probes)` carries the structure as FOLDABLE literal
+  // args, decoded ONCE at build time (group ids become positions) — the
+  // resulting expression carries plain Scala arrays and a single vector
+  // child, so per-row eval never touches Catalyst literals.
 
   private def fold(e: Expression, what: String): ArrayData = {
     require(e.foldable, s"graft_ivf_assign2 $what must be a literal")
@@ -162,16 +162,8 @@ object IvfExprs {
   def assign2(vec: Column, groups: Array[(Long, Array[Double])],
       children: Array[Array[(Long, Array[Double])]],
       probes: Int = 2): Column = {
-    graft.GraftExtensions.registerActive()
     require(groups.length == children.length,
       "groups and children must align")
-    val gC = array(groups.map(g =>
-      array(g._2.map(x => lit(x)).toSeq: _*)).toSeq: _*)
-    val cids = array(children.map(ch =>
-      array(ch.map(c => lit(c._1)).toSeq: _*)).toSeq: _*)
-    val cvs = array(children.map(ch =>
-      array(ch.map(c =>
-        array(c._2.map(x => lit(x)).toSeq: _*)).toSeq: _*)).toSeq: _*)
-    call_function("graft_ivf_assign2", vec, gC, cids, cvs, lit(probes))
+    column(TwoLevelArgmin(expression(vec), groups, children, probes))
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.Bridge.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -741,34 +741,28 @@ object TextHashExprs {
       copy(child = c)
   }
 
-  /** Plan-time extraction of the sorted-set literal: the registry
+  /** Plan-time extraction of a constant array argument: the registry
     * builder runs once per plan, so the array materializes out of the
-    * Literal exactly once (never per row). */
-  /** Plan-time extraction of a string-array literal (needle sets). */
-  private[functions] def stringSeqOf(e: Expression): Seq[UTF8String] =
-    e match {
-      case lit: org.apache.spark.sql.catalyst.expressions.Literal
-          if lit.value != null =>
-        val a = lit.value.asInstanceOf[ArrayData]
-        (0 until a.numElements()).map(a.getUTF8String)
-      case other => throw new IllegalArgumentException(
-        s"graft_count_any_of needs a non-null string-array literal, got $other")
+    * expression exactly once (never per row). Accepts any foldable
+    * expression, so SQL text can pass `array(...)`. */
+  private def constArray(e: Expression, what: String): ArrayData =
+    (if (e.foldable) e.eval() else null) match {
+      case a: ArrayData => a
+      case _ => throw new IllegalArgumentException(
+        s"$what needs a non-null constant array, got $e")
     }
 
-  private[functions] def sortedSetOf(e: Expression): Array[Long] = e match {
-    case lit: org.apache.spark.sql.catalyst.expressions.Literal
-        if lit.value != null =>
-      lit.value.asInstanceOf[ArrayData].toLongArray()
-    case other => throw new IllegalArgumentException(
-      s"graft_count_in_sorted_set needs a non-null array literal, got $other")
+  private def stringSeqOf(e: Expression): Seq[UTF8String] = {
+    val a = constArray(e, "graft_count_any_of")
+    (0 until a.numElements()).map(a.getUTF8String)
   }
 
+  private def sortedSetOf(e: Expression): Array[Long] =
+    constArray(e, "graft_count_in_sorted_set").toLongArray()
+
   /** [[CountInSortedSet]] as a Column (set must be sorted ascending). */
-  def countInSortedSet(arr: Column, sorted: Array[Long]): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_count_in_sorted_set", arr,
-      org.apache.spark.sql.functions.typedLit(sorted.toSeq))
-  }
+  def countInSortedSet(arr: Column, sorted: Array[Long]): Column =
+    column(CountInSortedSet(expression(arr), sorted))
 
   /** Summed non-overlapping occurrence count of a FIXED needle set in
     * one expression (r14): the `length(s) - length(replace(s, p, ""))`
@@ -824,11 +818,8 @@ object TextHashExprs {
   }
 
   /** [[CountAnyOf]] as a Column over a fixed needle list. */
-  def countAnyOf(text: Column, needles: Seq[String]): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_count_any_of", text,
-      org.apache.spark.sql.functions.typedLit(needles))
-  }
+  def countAnyOf(text: Column, needles: Seq[String]): Column =
+    column(CountAnyOf(expression(text), needles.map(UTF8String.fromString)))
 
   @inline private def isWsByte(b: Byte): Boolean =
     b == 0x20 || (b >= 0x09 && b <= 0x0D)
@@ -984,11 +975,10 @@ object TextHashExprs {
       s"$what must be an int literal, got $other")
   }
 
-  /** (identifier, info, builder) triples — the
-    * `SparkSessionExtensions.injectFunction` payloads. Shared by the
-    * lazy per-session [[graft.GraftExtensions.registerActive]] and by [[graft.GraftExtensions]]
-    * (`spark.sql.extensions=graft.GraftExtensions` registers every
-    * graft_* function at session build, the cluster-deployment path). */
+  /** (identifier, info, builder) triples — the SQL surface, injected at
+    * session build by [[graft.GraftExtensions]]. Each builder reads its
+    * literal arguments and builds the same expression as the Column
+    * function below it. */
   val injectables: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression)] = {
     def entry(name: String, cls: Class[_])(
@@ -1037,113 +1027,70 @@ object TextHashExprs {
   }
 
   /** One-pass text→MinHash signature (caller lowers/trims the text). */
-  def minhashText(text: Column, n: Int, k: Int): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_minhash_text", text,
-      org.apache.spark.sql.functions.lit(n),
-      org.apache.spark.sql.functions.lit(k))
-  }
+  def minhashText(text: Column, n: Int, k: Int): Column =
+    column(MinHashText(expression(text), n, k))
 
   /** MinHash signature from a persisted shingle-hash array. */
-  def minhashFromHashes(hashes: Column, k: Int): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_minhash_from_hashes", hashes,
-      org.apache.spark.sql.functions.lit(k))
-  }
+  def minhashFromHashes(hashes: Column, k: Int): Column =
+    column(MinHashFromHashes(expression(hashes), k))
 
   /** One-pass exact Jaccard over two array<long> columns. */
-  def jaccardLong(a: Column, b: Column): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_jaccard", a, b)
-  }
+  def jaccardLong(a: Column, b: Column): Column =
+    column(JaccardLongSets(expression(a), expression(b)))
 
   /** [[jaccardLong]] for pre-sorted distinct arrays (linear merge). */
-  def jaccardLongSorted(a: Column, b: Column): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_jaccard_sorted", a, b)
-  }
+  def jaccardLongSorted(a: Column, b: Column): Column =
+    column(JaccardSortedDistinct(expression(a), expression(b)))
 
   /** Intersection size of pre-sorted distinct long arrays. */
-  def intersectCountSorted(a: Column, b: Column): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_intersect_sorted", a, b)
-  }
+  def intersectCountSorted(a: Column, b: Column): Column =
+    column(IntersectCountSorted(expression(a), expression(b)))
 
   /** One-pass text→distinct-shingle-hash array (caller lowers/trims). */
-  def shingleHashes(text: Column, n: Int): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_shingle_hashes", text,
-      org.apache.spark.sql.functions.lit(n))
-  }
+  def shingleHashes(text: Column, n: Int): Column =
+    column(ShingleHashes(expression(text), n))
 
   /** One-pass text→SimHash over word n-grams (caller lowers/trims). */
-  def simhashText(text: Column, n: Int, portable: Boolean = false): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_simhash_text", text,
-      org.apache.spark.sql.functions.lit(n),
-      org.apache.spark.sql.functions.lit(if (portable) 1 else 0))
-  }
+  def simhashText(text: Column, n: Int, portable: Boolean = false): Column =
+    column(SimHashText(expression(text), n, portable))
 
   /** One-pass repetition statistics struct (caller lowers/trims). */
-  def repetitionStats(text: Column): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_repetition_stats", text)
-  }
+  def repetitionStats(text: Column): Column =
+    column(RepetitionStats(expression(text)))
 
   /** One-pass n-token window array (caller lowers/trims). */
-  def tokenWindows(text: Column, n: Int): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_token_windows", text,
-      org.apache.spark.sql.functions.lit(n))
-  }
+  def tokenWindows(text: Column, n: Int): Column =
+    column(TokenWindows(expression(text), n))
 
   /** [[WsSplit]] over an arbitrary column — `split(text, "\\s+", -1)` as
     * one native byte scan, NO lower/trim wrapper (the r14 win stopped at
     * the lower(trim(…)) pattern; nine call sites kept the regex because
     * only the wrapper differed — r15 closes them with this form). */
-  def wsSplit(text: Column): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_ws_split", text)
-  }
+  def wsSplit(text: Column): Column = column(WsSplit(expression(text)))
 
   /** The repo-wide whitespace tokenizer `split(lower(trim(text)), "\\s+")`
     * with the split as one native byte scan ([[WsSplit]]) — identical
     * output, no per-row Pattern.compile. Use for every tokenizing hot
     * path; oracles keep replaying the regex formulation. */
-  def wsTokens(text: Column): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_ws_split",
-      org.apache.spark.sql.functions.lower(
-        org.apache.spark.sql.functions.trim(text)))
-  }
+  def wsTokens(text: Column): Column =
+    wsSplit(org.apache.spark.sql.functions.lower(
+      org.apache.spark.sql.functions.trim(text)))
 
   /** Per-row term-frequency map over a token array (one hash-map pass;
     * the shuffle-free inverted-index build path). */
-  def termCounts(tokens: Column): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_term_counts", tokens)
-  }
+  def termCounts(tokens: Column): Column =
+    column(TermCounts(expression(tokens)))
 
   /** Portable hashing-trick bucket (unsigned FNV-1a mod dim). */
-  def fnvBucket(token: Column, dim: Int): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_fnv_bucket", token,
-      org.apache.spark.sql.functions.lit(dim))
-  }
+  def fnvBucket(token: Column, dim: Int): Column =
+    column(FnvBucket(expression(token), dim))
 
   /** HLL register parts struct(reg, rank) of a string value (see
     * [[HllParts]] for the rank-cap contract). */
-  def hllParts(value: Column, p: Int): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_hll_parts", value,
-      org.apache.spark.sql.functions.lit(p))
-  }
+  def hllParts(value: Column, p: Int): Column =
+    column(HllParts(expression(value), p))
 
   /** Count-min bucket indices (length-d array) of a string value. */
-  def cmsBuckets(value: Column, d: Int, w: Int): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_cms_buckets", value,
-      org.apache.spark.sql.functions.lit(d),
-      org.apache.spark.sql.functions.lit(w))
-  }
+  def cmsBuckets(value: Column, d: Int, w: Int): Column =
+    column(CmsBuckets(expression(value), d, w))
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.Bridge.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -162,20 +162,12 @@ object UnicodeExprs {
     entry("graft_cjk_count", classOf[CjkCount])(cs => CjkCount(cs.head)))
 
   /** NFKC + category fold (see [[NfkcFold]]). */
-  def nfkcFold(text: Column): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_nfkc_fold", text)
-  }
+  def nfkcFold(text: Column): Column = column(NfkcFold(expression(text)))
 
   /** Per-script character counts struct (see [[ScriptCounts]]). */
-  def scriptCounts(text: Column): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_script_counts", text)
-  }
+  def scriptCounts(text: Column): Column =
+    column(ScriptCounts(expression(text)))
 
   /** Single-pass CJK character count (see [[CjkCount]]). */
-  def cjkCount(text: Column): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function("graft_cjk_count", text)
-  }
+  def cjkCount(text: Column): Column = column(CjkCount(expression(text)))
 }

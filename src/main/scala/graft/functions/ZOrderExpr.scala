@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 /** Z-order (Morton) multi-dimensional clustering.
@@ -128,10 +129,8 @@ object ZOrder {
   }
 
   /** Morton key column over pre-quantized long columns. */
-  def zvalue(bits: Int, quantized: Column*): Column = {
-    graft.GraftExtensions.registerActive()
-    call_function(name, (lit(bits) +: quantized): _*)
-  }
+  def zvalue(bits: Int, quantized: Column*): Column =
+    Bridge.column(ZValue(quantized.map(Bridge.expression), bits))
 
   /** Cluster a DataFrame for multi-column data skipping: range-partition
     * into `numFiles` partitions by the Morton key of the given

@@ -43,17 +43,6 @@ object Filters {
     Cube(c.df.where(c.df(Dim.Band).isin(bands: _*)),
       c.meta.copy(bandOrder = bands))
 
-  /** `filter_bbox` — transform bbox corners from the given CRS to the cube
-    * CRS on the driver (openeo_odc_driver.py:1036-1078 uses pyproj; we use
-    * [[Crs]]), then plain range predicates that Catalyst turns into
-    * row-group skipping on x/y. */
-  def filterBbox(c: Cube, west: Double, south: Double, east: Double,
-      north: Double, bboxEpsg: Int = 4326): Cube =
-    filterBboxRef(c, west, south, east, north, EpsgRef(bboxEpsg))
-
-  /** [[filterBbox]] over a general [[CrsRef]] — accepts bbox corners given
-    * in a proj-string-defined CRS (e.g. a national grid with a datum
-    * shift), not just a registered EPSG code. */
   /** The bbox corners projected into the cube's own coordinate space —
     * the bounds [[filterBboxRef]] compares against, also reused by
     * [[Scan.loadCollection]]'s spatial partition pruning. */
@@ -73,6 +62,12 @@ object Filters {
     Geo.bboxOf(proj)
   }
 
+  /** `filter_bbox` — transform bbox corners from the given CRS to the cube
+    * CRS on the driver (openeo_odc_driver.py:1036-1078 uses pyproj; we use
+    * [[Crs]]), then plain range predicates that Catalyst turns into
+    * row-group skipping on x/y. The bbox CRS is a general [[CrsRef]]: a
+    * registered EPSG code or a proj-string-defined CRS (e.g. a national
+    * grid with a datum shift). */
   def filterBboxRef(c: Cube, west: Double, south: Double, east: Double,
       north: Double, bboxCrs: CrsRef): Cube = {
     val (xmin, ymin, xmax, ymax) =
@@ -87,12 +82,8 @@ object Filters {
   /** `filter_spatial` — clip to polygon(s): reproject vertices driver-side,
     * then the point-in-polygon kernel ([[Geo.pointInPolygons]];
     * openeo_odc_driver.py:686-707 rasterizes instead). Rows outside are
-    * dropped (semi-join semantics). */
-  def filterSpatial(c: Cube, rings: Seq[Geo.Ring], ringsEpsg: Int = 4326): Cube =
-    filterSpatialRef(c, rings, EpsgRef(ringsEpsg))
-
-  /** [[filterSpatial]] over a general [[CrsRef]] (same CRS conventions as
-    * [[filterBboxRef]]). */
+    * dropped (semi-join semantics). Same CRS conventions as
+    * [[filterBboxRef]]. */
   def filterSpatialRef(c: Cube, rings: Seq[Geo.Ring], ringsCrs: CrsRef): Cube = {
     val proj = c.meta.crs.flatMap(crsEpsg) match {
       case Some(cubeEpsg) =>

@@ -75,12 +75,9 @@ object Scan {
       bands: Seq[String] = Nil,
       temporalExtent: Option[(String, String)] = None,
       bbox: Option[(Double, Double, Double, Double)] = None, // w, s, e, n
-      bboxEpsg: Int = 4326,
       polygon: Option[Seq[Geo.Ring]] = None,
-      polygonEpsg: Int = 4326,
-      // general CRS reference for the spatial extent (proj-string capable);
-      // overrides bboxEpsg/polygonEpsg when set
-      extentCrs: Option[CrsRef] = None): Cube = {
+      // CRS of the spatial extent (bbox or polygon), proj-string capable
+      extentCrs: CrsRef = EpsgRef(4326)): Cube = {
     var df = Tables.read(spark, spec.path)
     val meta = CubeMeta(crs = spec.crs, grid = spec.grid,
       bandOrder = if (bands.nonEmpty) bands else spec.bandOrder)
@@ -123,7 +120,7 @@ object Scan {
       bbox.foreach { case (w, s, e, n) =>
         graftTileLayout.foreach { case (tc, x0, y0, dx, dy) =>
           val (xmin, ymin, xmax, ymax) = Filters.projectBboxToCube(
-            spec.crs, w, s, e, n, extentCrs.getOrElse(EpsgRef(bboxEpsg)))
+            spec.crs, w, s, e, n, extentCrs)
           def tx(x: Double): Long =
             math.floor(math.round((x - x0) / dx).toDouble / tc).toLong
           def ty(y: Double): Long =
@@ -143,13 +140,11 @@ object Scan {
     if (df.columns.contains("p_date") && graftStore) df = df.drop("p_date")
     var cube = Cube(df, meta)
     bbox.foreach { case (w, s, e, n) =>
-      cube = Filters.filterBboxRef(cube, w, s, e, n,
-        extentCrs.getOrElse(EpsgRef(bboxEpsg)))
+      cube = Filters.filterBboxRef(cube, w, s, e, n, extentCrs)
     }
     polygon.foreach { rings =>
       // bbox pre-filter + exact point-in-polygon, like rasterize+mask
-      cube = Filters.filterSpatialRef(cube, rings,
-        extentCrs.getOrElse(EpsgRef(polygonEpsg)))
+      cube = Filters.filterSpatialRef(cube, rings, extentCrs)
     }
     // per-band nodata→null, then value*scale+offset (scan-level projection)
     if (spec.adjust.nonEmpty) {

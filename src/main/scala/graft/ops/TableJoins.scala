@@ -136,9 +136,9 @@ object TableJoins {
     * ([[graft.plans.AsofJoinExec]]): same semantics as [[asofJoin]]
     * (law-tested), executed as one streaming merge over co-partitioned,
     * co-sorted children with O(1) per-partition state — no union row
-    * widening, no window machinery. Registers
-    * [[graft.plans.AsofJoinStrategy]] on the live session idempotently
-    * (sessions built with [[graft.GraftExtensions]] already have it). */
+    * widening, no window machinery. The session must be built with
+    * [[graft.GraftExtensions]], whose [[graft.plans.AsofJoinStrategy]]
+    * plans the operator. */
   def asofJoinNative(left: DataFrame, right: DataFrame, keys: Seq[String],
       leftTs: String, rightTs: String, payload: Seq[String],
       strict: Boolean = false,
@@ -146,7 +146,6 @@ object TableJoins {
     require(keys.nonEmpty, "asofJoinNative needs at least one key")
     require(payload.nonEmpty, "asofJoinNative needs payload columns")
     val spark = left.sparkSession
-    graft.GraftExtensions.registerAll(spark)
     val lPlan = left.queryExecution.analyzed
     // fresh exprIds on the right: self-joins (both sides filtered from
     // one source) would otherwise carry duplicate attribute ids across

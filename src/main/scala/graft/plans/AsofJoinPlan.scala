@@ -51,9 +51,8 @@ case class AsofJoinPlan(left: LogicalPlan, right: LogicalPlan,
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner strategy: [[AsofJoinPlan]] → [[AsofJoinExec]]. Register at
-  * session build via [[graft.GraftExtensions]] (`injectPlannerStrategy`)
-  * or live via `spark.experimental.extraStrategies`. */
+/** Planner strategy: [[AsofJoinPlan]] → [[AsofJoinExec]], registered at
+  * session build by [[graft.GraftExtensions]] (`injectPlannerStrategy`). */
 object AsofJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: AsofJoinPlan =>

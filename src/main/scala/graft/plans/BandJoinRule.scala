@@ -32,8 +32,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType, TimestampType}
   * explode factor vs join selectivity. Configure with
   * `spark.graft.bandJoin.binMicros` (default 1 hour). Registration:
   * sessions built with [[graft.GraftExtensions]] get it via
-  * `injectOptimizerRule`; a LIVE session can opt in with
-  * `spark.experimental.extraOptimizations ++= Seq(BandJoinRule)`.
+  * `injectOptimizerRule`.
   *
   * Two guards keep the session-wide rewrite from regressing plans it
   * shouldn't touch:

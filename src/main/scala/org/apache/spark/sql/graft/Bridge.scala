@@ -31,6 +31,13 @@ object Bridge {
       : org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
+  /** [[expression]] converts at analysis, in the analyzing session; this
+    * converts now, with no session, for checks on an argument's shape
+    * (names stay unresolved). */
+  def converted(c: org.apache.spark.sql.Column)
+      : org.apache.spark.sql.catalyst.expressions.Expression =
+    org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+
   /** A DataFrame's analyzed logical plan — needed by table-valued
     * function builders, which must return a [[LogicalPlan]] for the
     * relation a DataFrame already describes. */

@@ -1,7 +1,7 @@
 package graft
 
 import graft.cube.{Cube, Dim}
-import graft.ops.{Crs, Filters, Geo, SphericalMercator}
+import graft.ops.{Crs, EpsgRef, Filters, Geo, SphericalMercator}
 import org.apache.spark.sql.functions._
 
 class FiltersSpec extends SparkSpec {
@@ -25,8 +25,8 @@ class FiltersSpec extends SparkSpec {
       ("2024-01-01", "B04", y1, x1, 1.0),
       ("2024-01-01", "B04", y2, x2, 2.0))
     val c = Cube(c0.df, c0.meta.copy(crs = Some("EPSG:3035")))
-    val r = Filters.filterBbox(c, west = 11.2, south = 46.4,
-      east = 11.4, north = 46.6)
+    val r = Filters.filterBboxRef(c, west = 11.2, south = 46.4,
+      east = 11.4, north = 46.6, EpsgRef(4326))
     r.df.select("value").collect().map(_.getDouble(0)).toSeq shouldBe Seq(1.0)
   }
 
@@ -58,8 +58,8 @@ class FiltersSpec extends SparkSpec {
       ("2024-01-01", "B04", y1, x1, 1.0),
       ("2024-01-01", "B04", y2, x2, 2.0))
     val c = Cube(c0.df, c0.meta.copy(crs = Some("EPSG:3857")))
-    val r = Filters.filterBbox(c, west = 11.2, south = 46.4,
-      east = 11.4, north = 46.6)
+    val r = Filters.filterBboxRef(c, west = 11.2, south = 46.4,
+      east = 11.4, north = 46.6, EpsgRef(4326))
     r.df.select("value").collect().map(_.getDouble(0)).toSeq shouldBe Seq(1.0)
   }
 
@@ -108,8 +108,8 @@ class FiltersSpec extends SparkSpec {
       ("2024-01-01", "B04", y1, x1, 1.0),
       ("2024-01-01", "B04", y2, x2, 2.0))
     val c = Cube(c0.df, c0.meta.copy(crs = Some("EPSG:2154")))
-    val r = Filters.filterBbox(c, west = 2.0, south = 48.5,
-      east = 2.7, north = 49.1)
+    val r = Filters.filterBboxRef(c, west = 2.0, south = 48.5,
+      east = 2.7, north = 49.1, EpsgRef(4326))
     r.df.select("value").collect().map(_.getDouble(0)).toSeq shouldBe Seq(1.0)
   }
 
@@ -119,7 +119,7 @@ class FiltersSpec extends SparkSpec {
     val c0 = cubeOf(("2024-01-01", "B04", 0, 0, 1.0))
     val c = Cube(c0.df, c0.meta.copy(crs = Some("EPSG:99999")))
     val e = the[graft.OpenEoError] thrownBy
-      Filters.filterBbox(c, 0, 0, 1, 1)
+      Filters.filterBboxRef(c, 0, 0, 1, 1, EpsgRef(4326))
     e.code shouldBe "CrsNotSupported"
   }
 
@@ -167,14 +167,15 @@ class FiltersSpec extends SparkSpec {
   }
 
   test("filter_bbox slices x/y ranges") {
-    val r = Filters.filterBbox(base, west = 0.5, south = 0.5, east = 1.5, north = 1.5)
+    val r = Filters.filterBboxRef(base, west = 0.5, south = 0.5, east = 1.5,
+      north = 1.5, EpsgRef(4326))
     r.df.count() shouldBe 2 // only the (1,1) rows
   }
 
   test("filter_spatial point-in-polygon keeps inside points only") {
     // unit square around (0,0) only
-    val r = Filters.filterSpatial(base,
-      Seq(Seq((-0.5, -0.5), (0.5, -0.5), (0.5, 0.5), (-0.5, 0.5))))
+    val r = Filters.filterSpatialRef(base,
+      Seq(Seq((-0.5, -0.5), (0.5, -0.5), (0.5, 0.5), (-0.5, 0.5))), EpsgRef(4326))
     r.df.count() shouldBe 4
     r.df.select(Dim.X).distinct().collect().map(_.getDouble(0)).toSet shouldBe Set(0.0)
   }

@@ -492,6 +492,31 @@ class GraphCompilerSpec extends SparkSpec {
       .head().getDouble(4) shouldBe 830.0
   }
 
+  test("a named-reducer callback with more than one node, or over another " +
+      "node's output, is ProcessUnsupported") {
+    // the reducer {a: absolute(data), m: mean(a)} must not reduce with the
+    // mean of the raw values, for any process that takes a named reducer
+    val twoNodes = """{"process_graph": {
+      "a": {"process_id": "absolute", "arguments": {"x": {"from_parameter": "data"}}},
+      "m": {"process_id": "mean", "arguments": {"data": {"from_node": "a"}},
+            "result": true}}}"""
+    val overLiteral = """{"process_graph": {
+      "m": {"process_id": "mean", "arguments": {"data": [1, 2]}, "result": true}}}"""
+    val load = """"load": {"process_id": "load_collection", "arguments": {"id": "s2_l2a"}}"""
+    for (cb <- Seq(twoNodes, overLiteral); (p, extra, arg) <- Seq(
+        ("aggregate_temporal_period", """"period": "month"""", "reducer"),
+        ("aggregate_temporal", """"intervals": [["2024-01-01", "2024-02-01"]]""", "reducer"),
+        ("aggregate_spatial_window", """"size": [2, 2]""", "reducer"),
+        ("aggregate_spatial", """"geometries": {"type": "Polygon", "coordinates":
+          [[[0, 0], [2, 0], [2, 2], [0, 2], [0, 0]]]}""", "reducer"),
+        ("apply_neighborhood", """"size": 3""", "process"))) {
+      val g = s"""{$load, "n": {"process_id": "$p", "arguments": {
+        "data": {"from_node": "load"}, $extra, "$arg": $cb}, "result": true}}"""
+      val e = intercept[OpenEoError](compiler.compile(g))
+      withClue(p) { e.code shouldBe "ProcessUnsupported" }
+    }
+  }
+
   test("malformed graphs fail with explanatory errors, never NPE/MatchError") {
     // systematic corruptions of a valid graph: every one must raise SOME
     // exception with a message — never a bare NullPointerException,

@@ -31,7 +31,7 @@ class PlanQualitySpec extends SparkSpec {
     spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
     val c = Scan.loadCollection(spark, spec, bands = Seq("B04"),
       temporalExtent = Some(("2022-06-01", "2022-06-03")),
-      bbox = Some((0.5, 0.5, 2.5, 2.5)), bboxEpsg = 0)
+      bbox = Some((0.5, 0.5, 2.5, 2.5)), extentCrs = graft.ops.EpsgRef(0))
     val plan = planString(c.df)
     plan should include("PushedFilters")
     // single-band isin simplifies to EqualTo; time + x/y ranges pushed
@@ -209,11 +209,11 @@ class PlanQualitySpec extends SparkSpec {
       bandOrder = Seq("B04"), grid = Some(GridRef(0, 0, 1, 1)))
     val flatSpec = Scan.CollectionSpec(s"$dir/flat",
       bandOrder = Seq("B04"), grid = Some(GridRef(0, 0, 1, 1)))
-    // bbox over cells x,y in [5.5, 9.5] (bboxEpsg 0 = raw cube coords)
+    // bbox over cells x,y in [5.5, 9.5] (EPSG 0 = raw cube coords)
     val tiled = Scan.loadCollection(spark, tiledSpec,
-      bbox = Some((5.5, 5.5, 9.5, 9.5)), bboxEpsg = 0)
+      bbox = Some((5.5, 5.5, 9.5, 9.5)), extentCrs = graft.ops.EpsgRef(0))
     val flat = Scan.loadCollection(spark, flatSpec,
-      bbox = Some((5.5, 5.5, 9.5, 9.5)), bboxEpsg = 0)
+      bbox = Some((5.5, 5.5, 9.5, 9.5)), extentCrs = graft.ops.EpsgRef(0))
     rowSet(tiled.df) shouldBe rowSet(flat.df)
     tiled.df.count() shouldBe 2L * 4 * 4 // x,y ∈ {6..9}, both days
     tiled.df.columns should not contain "p_tx"
@@ -223,7 +223,7 @@ class PlanQualitySpec extends SparkSpec {
     // tile span: cells 6-9 → tiles 1-2, widened ±1 → tiles 0-3 = ALL in
     // this tiny grid; use a corner bbox to prove real pruning
     val corner = Scan.loadCollection(spark, tiledSpec,
-      bbox = Some((0.0, 0.0, 1.0, 1.0)), bboxEpsg = 0)
+      bbox = Some((0.0, 0.0, 1.0, 1.0)), extentCrs = graft.ops.EpsgRef(0))
     corner.df.count() shouldBe 2L * 2 * 2
     val scanned = corner.df.queryExecution.executedPlan.collectLeaves()
       .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec =>
@@ -234,7 +234,7 @@ class PlanQualitySpec extends SparkSpec {
     // pruning widens ±1 day, so both days remain but tiles still prune
     val both = Scan.loadCollection(spark, tiledSpec,
       temporalExtent = Some(("2022-06-01", "2022-06-02")),
-      bbox = Some((0.0, 0.0, 1.0, 1.0)), bboxEpsg = 0)
+      bbox = Some((0.0, 0.0, 1.0, 1.0)), extentCrs = graft.ops.EpsgRef(0))
     both.df.count() shouldBe 1L * 2 * 2
   }
 

@@ -177,6 +177,23 @@ class ServerSpec extends SparkSpec {
     spark.read.parquet(out).count() shouldBe 16 // nothing filtered
   }
 
+  test("POST /graph with a two-node reducer callback gets a 400, not a 200") {
+    val graph = """{
+      "load": {"process_id": "load_collection", "arguments": {"id": "c1"}},
+      "agg": {"process_id": "aggregate_temporal_period", "arguments": {
+        "data": {"from_node": "load"}, "period": "month",
+        "reducer": {"process_graph": {
+          "a": {"process_id": "absolute",
+                "arguments": {"x": {"from_parameter": "data"}}},
+          "m": {"process_id": "mean",
+                "arguments": {"data": {"from_node": "a"}}, "result": true}}}},
+        "result": true}}"""
+    val (code, body) = http("POST", "/graph", graph)
+    withClue(body) { code shouldBe 400 }
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+      .get("code").asText shouldBe "ProcessUnsupported"
+  }
+
   test("POST /graph with a typed openEO error returns the spec shape") {
     val graph = """{
       "load": {"process_id": "load_collection", "arguments": {"id": "c1"}},

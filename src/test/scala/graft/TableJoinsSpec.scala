@@ -385,7 +385,6 @@ class TableJoinsSpec extends SparkSpec {
   }
 
   test("graft_zvalue is callable from pure SQL via the extensions registry") {
-    GraftExtensions.registerAll(spark)
     spark.sql("SELECT graft_zvalue(3, 5L, 3L) AS z").as[Long].head() shouldBe 27L
   }
 
